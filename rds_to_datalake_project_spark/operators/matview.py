@@ -139,6 +139,23 @@ def _semi_on_groups(
     return rows.join(F.broadcast(t), cond, "left_semi")
 
 
+def _semi_on_keys(
+    rows: DataFrame, col: str, keys: DataFrame, broadcast: bool
+) -> DataFrame:
+    """Semi-join of ``rows`` against the distinct non-NULL values of
+    ``keys``' one column ``col`` (join keys: NULL never matches, so
+    dropping it is exact). ``broadcast`` only for key sets the caller
+    knows are driver-sized."""
+    ks = (
+        keys.select(F.col(col).alias("__rk"))
+        .filter(F.col("__rk").isNotNull())
+        .distinct()
+    )
+    if broadcast:
+        ks = F.broadcast(ks)
+    return rows.join(ks, rows[col] == ks["__rk"], "left_semi")
+
+
 def _merge_touched(store, touched, fresh, group_cols, aggs, seq) -> None:
     """Shared merge step of affected-group recompute (single-table and
     join views): upsert the recomputed groups, tombstone touched
@@ -342,7 +359,9 @@ def _zone_pruned_rows(
     # mapping a touched value to a closed (lo, hi) source interval).
     # Physical group columns prune point-wise; derived date_trunc keys
     # prune through their source column's bucket interval.
-    specs: dict = {c: (c, lambda v: (v, v)) for c in cols}
+    specs: dict = {
+        c: (c, lambda v: None if v is None else (v, v)) for c in cols
+    }
     for b, (src, fn) in (bucket_cols or {}).items():
         specs.setdefault(src, (b, fn))
     if not specs:
@@ -517,8 +536,8 @@ class MaterializedView:
         once by the caller) — deriving here too would double-apply a
         self-shadowing group expression (``v + 1 AS v``): incremental
         refresh would group by v+2 while full refresh groups by v+1,
-        tombstoning real groups. JoinMaterializedView has always kept
-        this discipline (derives only in _joined)."""
+        tombstoning real groups. The join views keep the same
+        discipline (they derive only in _joined)."""
         out = rows.groupBy(*self.group_cols).agg(
             *[F.expr(e).alias(c) for c, e in self.aggs.items()]
         )
@@ -615,346 +634,6 @@ def attach_matview_maintenance(base: KeyedTable, view: MaterializedView) -> None
     base.add_maintenance_hook(matview_refresh)
 
 
-class JoinMaterializedView:
-    """``SELECT group_cols, aggs FROM left JOIN right ON left.lk =
-    right.rk GROUP BY group_cols`` (inner equi-join), incrementally
-    maintained from BOTH tables' change feeds — the classic
-    incremental-view-maintenance case a single-table matview cannot
-    cover: a dimension-side update MOVES every joined fact row between
-    groups, and a fact-side delete shrinks a group it never names.
-
-    Maintenance is AFFECTED-GROUP RECOMPUTE lifted to the join:
-
-    1. The two change windows (split pre/post images, so a mutated
-       join key contributes BOTH its old and new value) reduce to the
-       distinct touched JOIN-KEY values — ∝ the change set.
-    2. Touched groups = group values reachable from those keys in the
-       NEW state (current join, both sides pre-pruned by a broadcast
-       key semi-join) ∪ the OLD state (the as-of join at the previous
-       cursor — two metadata snapshot reads, same key pruning). The
-       old side is what catches groups that only LOST rows.
-    3. Exactly those groups are recomputed from the current join and
-       merged into the view's KeyedTable store; groups with no
-       surviving join rows become delete tombstones.
-
-    Recomputing (never retracting) keeps MIN/MAX/COUNT(DISTINCT)/
-    percentile aggregates correct with no invertibility requirement;
-    cost ∝ the touched groups' join rows, never either corpus. A
-    replayed refresh recomputes the same groups from the same
-    snapshots — idempotent — so the cursor marker is written after
-    the merge; a crash between them repeats work, never corrupts.
-
-    ``how`` is ``"inner"`` (default) or ``"left"``: a LEFT join keeps
-    unmatched left rows, whose right-side group columns are NULL —
-    a real group the null-safe maintenance keeps correct, including
-    the transition case (a NEW right row for key k moves k's left
-    rows from the NULL group to a value group; k is a touched key, so
-    both groups refresh).
-
-    Requirements: both tables versioned (the cursor is a pair of
-    commit versions); column names referenced by ``group_cols`` /
-    ``aggs`` must be unambiguous across the joined frame (TPC-H-style
-    prefixed schemas satisfy this)."""
-
-    def __init__(
-        self,
-        left: KeyedTable,
-        right: KeyedTable,
-        path: str,
-        on: tuple[str, str],
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "join_matview",
-        how: str = "inner",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-    ):
-        if not (left.retain_versions and right.retain_versions):
-            raise ValueError(
-                "JoinMaterializedView requires BOTH tables versioned "
-                "(retain_versions > 0) — the cursor is a commit-version pair"
-            )
-        if how not in ("inner", "left"):
-            raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-        self.how = how
-        if not group_cols or not aggs:
-            raise ValueError("group_cols and aggs must be non-empty")
-        bad = set(group_cols) & set(aggs)
-        if bad:
-            raise ValueError(f"column(s) both grouped and aggregated: {sorted(bad)}")
-        self.group_exprs = dict(group_exprs or {})
-        stray = set(self.group_exprs) - set(group_cols)
-        if stray:
-            raise ValueError(
-                f"group_exprs name(s) not in group_cols: {sorted(stray)}"
-            )
-        self.left, self.right = left, right
-        self.spark: SparkSession = left.spark
-        self.path = path
-        self.l_on, self.r_on = on
-        self.group_cols = list(group_cols)
-        self.aggs = dict(aggs)
-        self.max_broadcast_keys = max_broadcast_keys
-        self.store = KeyedTable(
-            self.spark,
-            path,
-            TableSpec(
-                name,
-                record_key=tuple(group_cols),
-                precombine_key=_SEQ_COL,
-                partition_granularity="",
-                hash_buckets=store_hash_buckets,
-            ),
-            retain_versions=store_retain_versions,
-        )
-
-    def _marker_path(self) -> str:
-        return f"{self.path}/.mv/_BASE_VERSIONS"
-
-    def refreshed_versions(self) -> tuple[int, int] | None:
-        """Commit-version pair the view reflects, or None when never
-        refreshed, unreadable, or EITHER base was reset (incarnation
-        token mismatch) — commit numbers alone cannot tell a reset
-        from progress."""
-        parts = (_read_small(self.spark, self._marker_path()) or "").split()
-        if len(parts) != 4:
-            return None
-        try:
-            versions = (int(parts[0]), int(parts[1]))
-        except ValueError:
-            return None
-        if parts[2] != _inc_token(self.left) or parts[3] != _inc_token(
-            self.right
-        ):
-            return None
-        return versions
-
-    def _joined(self, l: DataFrame, r: DataFrame) -> DataFrame:
-        """Join the two sides and attach derived group-key columns —
-        every consumer of group columns reads through here (or through
-        _aggregate), so derived keys are never missing."""
-        out = l.join(r, l[self.l_on] == r[self.r_on], self.how)
-        for c, e in self.group_exprs.items():
-            out = out.withColumn(c, F.expr(e))
-        return out
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        out = rows.groupBy(*self.group_cols).agg(
-            *[F.expr(e).alias(c) for c, e in self.aggs.items()]
-        )
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(_SEQ_COL)
-
-    def refresh(self) -> dict:
-        return _record_refresh(self, self._refresh())
-
-    def _refresh(self) -> dict:
-        l_latest = (self.left.versions() or [0])[-1]
-        r_latest = (self.right.versions() or [0])[-1]
-        cur = self.refreshed_versions()
-        if cur == (l_latest, r_latest):
-            return {
-                "mode": "noop",
-                "versions": cur,
-                "base_version": sum(cur),
-                "groups_refreshed": 0,
-            }
-        if (
-            cur is None
-            or cur[0] not in self.left.readable_versions()
-            or cur[1] not in self.right.readable_versions()
-        ):
-            return self._full(l_latest, r_latest)
-        return self._incremental(cur, (l_latest, r_latest))
-
-    def _write_cursor(self, versions: tuple[int, int]) -> None:
-        _write_small(
-            self.spark,
-            self._marker_path(),
-            f"{versions[0]} {versions[1]} "
-            f"{_inc_token(self.left)} {_inc_token(self.right)}",
-        )
-
-    def _full(self, l_latest: int, r_latest: int) -> dict:
-        rows = self._joined(self.left.read(), self.right.read())
-        self.store.initial_load(self._aggregate(rows, l_latest + r_latest))
-        n = self.store.read().count()
-        self._write_cursor((l_latest, r_latest))
-        return {
-            "mode": "full",
-            "versions": (l_latest, r_latest),
-            # scalar cursor for surfaces that report one number (the
-            # SQL layer's result frames): monotone — each refresh
-            # advances ≥1 head and never regresses the other
-            "base_version": l_latest + r_latest,
-            "groups_refreshed": n,
-        }
-
-    def _touched_keys(self, cur, new) -> tuple[DataFrame | None, bool]:
-        """``(distinct non-null join-key values any change image names,
-        null_left_touched)`` — pre AND post images, so a mutated join
-        key retires its old neighborhood too. The flag marks LEFT-join
-        changes to null-key left rows: they live in the NULL group
-        (they never join), which must refresh even though no join-key
-        value names it. Under an inner join null keys affect nothing
-        and the flag stays False."""
-        frames = []
-        null_left = False
-        if new[0] > cur[0]:
-            lch = self.left.table_changes(
-                cur[0], new[0], include_preimage=True
-            ).select(F.col(self.l_on).alias("__jk"))
-            frames.append(lch)
-            if self.how == "left":
-                null_left = bool(
-                    lch.filter(F.col("__jk").isNull()).limit(1).count()
-                )
-        if new[1] > cur[1]:
-            frames.append(
-                self.right.table_changes(cur[1], new[1], include_preimage=True)
-                .select(F.col(self.r_on).alias("__jk"))
-            )
-        if not frames:
-            return None, False
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        out = out.filter(F.col("__jk").isNotNull()).distinct()
-        return out, null_left
-
-    def _groups_via(
-        self, l: DataFrame, r: DataFrame, keys: DataFrame | None, null_left: bool
-    ) -> DataFrame:
-        """Distinct group values reachable from the touched join keys
-        in the (l, r) state — both sides pruned by the broadcast key
-        semi-join BEFORE the join, so cost ∝ the keys' neighborhoods.
-        ``null_left`` additionally pulls in the null-key left rows
-        (the LEFT join's NULL-group membership)."""
-        if keys is not None:
-            lt = l.join(
-                F.broadcast(keys), l[self.l_on] == keys["__jk"], "left_semi"
-            )
-            if null_left:
-                lt = lt.unionByName(l.filter(l[self.l_on].isNull()))
-            rt = r.join(
-                F.broadcast(keys), r[self.r_on] == keys["__jk"], "left_semi"
-            )
-        else:  # only null-key left rows changed
-            lt = l.filter(l[self.l_on].isNull())
-            rt = r.limit(0)
-        return self._joined(lt, rt).select(*self.group_cols).distinct()
-
-    def _incremental(self, cur, new) -> dict:
-        keys, null_left = self._touched_keys(cur, new)
-        if keys is not None:
-            keys = keys.localCheckpoint(eager=False)
-            n_keys = keys.count()
-            if n_keys > self.max_broadcast_keys:
-                # Bulk rewrite on either side: the touched-key set is
-                # corpus-sized, so both the key broadcast and the
-                # group broadcast below would OOM the driver at scale.
-                # Degrade to full recompute — at this change fraction
-                # it does no more work than affected-group recompute.
-                return self._full(new[0], new[1])
-            if not n_keys and not null_left:
-                keys = None
-        if keys is None and not null_left:
-            self._write_cursor(new)
-            return {
-                "mode": "incremental",
-                "versions": new,
-                "base_version": sum(new),
-                "groups_refreshed": 0,
-            }
-        l_now, r_now = self.left.read(), self.right.read()
-        l_old = self.left.read_as_of(cur[0])
-        r_old = self.right.read_as_of(cur[1])
-        touched = (
-            self._groups_via(l_now, r_now, keys, null_left)
-            .unionByName(self._groups_via(l_old, r_old, keys, null_left))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        n_touched = touched.count()
-        if not n_touched:
-            self._write_cursor(new)
-            return {
-                "mode": "incremental",
-                "versions": new,
-                "base_version": sum(new),
-                "groups_refreshed": 0,
-            }
-        if n_touched > self.max_broadcast_keys:
-            return self._full(new[0], new[1])
-        seq = new[0] + new[1]
-        # Zone-prune each side's recompute scan by the physical group
-        # columns it owns (advisory; the semi-join below stays exact).
-        # LEFT-join safety: a touched NULL group puts NULL in EVERY
-        # right-side group column's projection, which disables right
-        # pruning entirely, so NULL-extended rows are never fabricated
-        # into a refreshed NULL group.
-        phys = [c for c in self.group_cols if c not in self.group_exprs]
-        buckets = _bucket_prunable(self.group_exprs)
-        l_rec = _zone_pruned_rows(
-            self.left,
-            touched,
-            [c for c in phys if c in l_now.columns],
-            bucket_cols=buckets,
-        )
-        r_rec = _zone_pruned_rows(
-            self.right,
-            touched,
-            [c for c in phys if c in r_now.columns],
-            bucket_cols=buckets,
-        )
-        if (
-            l_rec is None
-            and self.how == "inner"
-            and not self.group_exprs
-            and all(c in r_now.columns for c in self.group_cols)
-        ):
-            # All group columns live on the DIM side: the fact scan has
-            # nothing to zone-prune on directly, but the touched-group
-            # dim rows name every join key that can reach an affected
-            # row (inner join) — propagate them through the fact's
-            # join-key zones instead. Same advisory/exactness contract.
-            dim_keys = _semi_on_groups(r_now, touched, self.group_cols).select(
-                F.col(self.r_on).alias(self.l_on)
-            )
-            l_rec = _zone_pruned_rows(self.left, dim_keys, [self.l_on])
-        joined = self._joined(
-            l_rec if l_rec is not None else l_now,
-            r_rec if r_rec is not None else r_now,
-        )
-        affected = _semi_on_groups(joined, touched, self.group_cols)
-        fresh = self._aggregate(affected, seq).localCheckpoint(eager=False)
-        _merge_touched(
-            self.store, touched, fresh, self.group_cols, self.aggs, seq
-        )
-        self._write_cursor(new)
-        return {
-            "mode": "incremental",
-            "versions": new,
-            "base_version": sum(new),
-            "groups_refreshed": n_touched,
-        }
-
-
-def attach_join_matview_maintenance(view: JoinMaterializedView) -> None:
-    """Enroll the view in BOTH base tables' post-commit maintenance
-    slots — whichever side commits, the refresh reads both heads."""
-
-    def jmv_refresh(_table: KeyedTable) -> None:
-        view.refresh()
-
-    view.left.add_maintenance_hook(jmv_refresh)
-    view.right.add_maintenance_hook(jmv_refresh)
-
-
 # --- delta-merge maintenance (invertible aggregates) --------------------------
 
 
@@ -1028,7 +707,7 @@ def _require_disjoint_columns(tables: list[KeyedTable]) -> None:
 
 class _SignedDeltaMergeMixin:
     """Shared machinery of the signed-delta maintainers
-    (:class:`DeltaMaterializedView`, :class:`DeltaJoinMaterializedView`):
+    (:class:`DeltaMaterializedView`, :class:`DeltaChainMaterializedView`):
     hidden-column naming, the intent-marker crash protocol, the
     full-recompute aggregate that seeds the hidden columns, the signed
     change-window aggregate, and the store merge. Hosts expose
@@ -1704,434 +1383,29 @@ class DeltaMaterializedView(_SignedDeltaMergeMixin, MaterializedView):
         return out
 
 
-class DeltaJoinMaterializedView(_SignedDeltaMergeMixin, JoinMaterializedView):
-    """GROUP BY over an inner equi-join, maintained by SIGNED DELTA
-    MERGE — the join-bilinearity identity
-
-        Δ(A ⋈ B) = ΔA ⋈ B_new  +  A_new ⋈ ΔB  −  ΔA ⋈ ΔB
-
-    (A_new⋈B_new − A_old⋈B_old expanded with A_old = A_new − ΔA; the
-    third term subtracts the change-window×change-window pairs the
-    first two both count). Each term carries a per-row sign — ΔA's
-    image sign, ΔB's image sign, and −sign_A·sign_B respectively —
-    and the signed union feeds the same grouped-delta merge as
-    :class:`DeltaMaterializedView`.
-
-    Scale contrast with :class:`JoinMaterializedView` (affected-group
-    recompute): recompute re-joins and re-aggregates every row of
-    every touched GROUP — a one-order change against a
-    billion-row-group view re-aggregates the billion rows. The delta
-    form touches base data only to join each side's change window
-    against the OTHER side's current state, both reads pruned to the
-    changed join keys (zone-map file pruning on the join-key column
-    when a sidecar exists + an exact broadcast key semi-join either
-    way) — refresh I/O ∝ the change set's join NEIGHBORHOODS, never
-    either corpus and never a whole group. Both snapshots are read at
-    the CURRENT heads (no as-of reads), so retention only has to
-    cover the change window itself.
-
-    LEFT joins are maintained as inner + DANGLING corrections. A left
-    join is the inner join plus every unmatched left row extended with
-    NULLs; the inner part is bilinear as above, and the dangling part
-
-        D(A, B) = Σ_{a ∈ A} [match_B(a.key) = 0] · nullext(a)
-
-    moves only where a key's match COUNT transitions 0 ↔ positive:
-
-        ΔD = [D(A_new,B_new) − D(A_old,B_new)]   (ΔA at B_new)
-           + [D(A_old,B_new) − D(A_old,B_old)]   (flip keys × A_old)
-
-    The first bracket keeps exactly the ΔA rows whose key is matchless
-    at B_NEW (both signs — the bracket holds B fixed at its new
-    state); the second re-states A_old = A_new − ΔA over the keys
-    whose match count flipped. match_new comes from the current right
-    side PRUNED to the window's keys; match_old = match_new − Δmatch
-    is pure window arithmetic — no as-of reads, I/O still ∝ the change
-    neighborhoods. NULL left keys never match, so they ride the first
-    bracket with both indicators true.
-
-    Requirements beyond the parent: invertible aggregates (sum/count/avg, plus
-    min/max with JOIN-SIDE extremum repair — groups where a removed
-    contribution tied-or-beat the stored extremum re-aggregate from
-    the current join, zone-pruned and group-restricted; a pair that
-    nets to zero across the inclusion–exclusion terms appears with
-    BOTH signs, so any spurious added-instance that could corrupt a
-    merged extremum is accompanied by a removed-instance that forces
-    the repair instead); both tables' column names disjoint as ever.
-    Same intent-marker crash protocol, bulk-rewrite degradation,
-    NULL-sum semantics, and hash-bucketed store pruning as the
-    single-table delta class.
-    """
-
-    def __init__(
-        self,
-        left: KeyedTable,
-        right: KeyedTable,
-        path: str,
-        on: tuple[str, str],
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "delta_join_matview",
-        how: str = "inner",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-    ):
-        if how not in ("inner", "left"):
-            raise ValueError(
-                f"DeltaJoinMaterializedView supports how='inner' or "
-                f"'left', got {how!r}"
-            )
-        self._parsed = _parse_invertible_aggs(
-            aggs, allow_extrema=True, allow_distinct=True
-        )
-        super().__init__(
-            left,
-            right,
-            path,
-            on=on,
-            group_cols=group_cols,
-            aggs=aggs,
-            name=name,
-            how=how,
-            max_broadcast_keys=max_broadcast_keys,
-            group_exprs=group_exprs,
-            store_retain_versions=store_retain_versions,
-            store_hash_buckets=store_hash_buckets,
-        )
-        _require_disjoint_columns([left, right])
-        self._init_aux_stores(path, name, group_cols, store_hash_buckets)
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        out = rows.groupBy(*self.group_cols).agg(*self._delta_full_agg_cols())
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(*self._hidden_store_cols())
-
-    def _full(self, l_latest: int, r_latest: int) -> dict:
-        self._rebuild_aux(
-            self._joined(self.left.read(), self.right.read()), l_latest + r_latest
-        )
-        out = super()._full(l_latest, r_latest)
-        self._clear_pending()
-        return out
-
-    def _signed_changes(self, table: KeyedTable, since: int, latest: int):
-        """The table's netted change window with meta columns folded
-        into one integer ``__sg`` (±1) so the two windows can join
-        each other without column collisions."""
-        ch = table.table_changes(since, latest, include_preimage=True)
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit(1),
-        ).otherwise(F.lit(-1))
-        return ch.withColumn("__sg", sign).drop("_change_type")
-
-    def _pruned_current(
-        self, table: KeyedTable, key_col: str, keys: DataFrame
-    ) -> DataFrame:
-        """Current snapshot restricted to the changed join keys:
-        advisory zone-map file pruning on the join-key column first
-        (files opened ∝ the keys' zones when a sidecar exists), then
-        the exact broadcast key semi-join either way."""
-        rows = _zone_pruned_rows(table, keys, [key_col])
-        if rows is None:
-            rows = table.read()
-        t = keys.select(F.col(key_col).alias("__jk"))
-        return rows.join(
-            F.broadcast(t), rows[key_col] == t["__jk"], "left_semi"
-        )
-
-    def _dangling_terms(self, dl, dr) -> list[DataFrame]:
-        """Signed NULL-extension contributions for the LEFT-join form
-        (class docstring): ΔA rows dangling in their own state's B,
-        plus A_old rows at keys whose match count flipped 0 ↔ positive
-        — both as left-row frames with every right column NULLed, so
-        they union with the inner terms and feed the same grouped
-        delta. Reads ∝ the window's key neighborhoods (pruned current
-        snapshots); match_old is window arithmetic, never an as-of."""
-        if dl is None and dr is None:
-            return []
-        terms: list[DataFrame] = []
-        rfields = self.right.read().schema.fields
-
-        def _nullext(aframe: DataFrame) -> DataFrame:
-            for f in rfields:
-                aframe = aframe.withColumn(f.name, F.lit(None).cast(f.dataType))
-            return aframe
-
-        keyfs = [
-            d.select(F.col(on).alias("__dk"))
-            for d, on in ((dl, self.l_on), (dr, self.r_on))
-            if d is not None
-        ]
-        keys = keyfs[0] if len(keyfs) == 1 else keyfs[0].unionByName(keyfs[1])
-        keys = (
-            keys.filter(F.col("__dk").isNotNull())
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # match_new per key from the pruned current right side;
-        # match_old = match_new − Δmatch (signed window count)
-        cur_r = self._pruned_current(
-            self.right, self.r_on, keys.select(F.col("__dk").alias(self.r_on))
-        )
-        mn = (
-            cur_r.groupBy(self.r_on)
-            .agg(F.count(F.lit(1)).alias("__mn"))
-            .select(F.col(self.r_on).alias("__dk"), "__mn")
-        )
-        counts = keys.join(F.broadcast(mn), "__dk", "left").withColumn(
-            "__mn", F.coalesce("__mn", F.lit(0).cast("long"))
-        )
-        if dr is not None:
-            dm = (
-                dr.groupBy(self.r_on)
-                .agg(F.sum("__sg").alias("__dm"))
-                .select(F.col(self.r_on).alias("__dk"), "__dm")
-            )
-            counts = counts.join(F.broadcast(dm), "__dk", "left").withColumn(
-                "__dm", F.coalesce("__dm", F.lit(0).cast("long"))
-            )
-        else:
-            counts = counts.withColumn("__dm", F.lit(0).cast("long"))
-        counts = counts.withColumn(
-            "__mo", F.col("__mn") - F.col("__dm")
-        ).localCheckpoint(eager=False)
-        aux_cols = ["__dk", "__mn", "__dm", "__mo"]
-        if dl is not None:
-            # bracket 1 is evaluated ENTIRELY at B_new — both signs
-            # check match_new (a removed image whose key was matched
-            # only in the OLD state is bracket 2's business, restated
-            # through A_old = A_new − ΔA). A NULL key misses the
-            # counts join and coalesces to 0 matches (never matches).
-            d = dl.join(
-                F.broadcast(counts), dl[self.l_on] == counts["__dk"], "left"
-            )
-            keep = F.coalesce(F.col("__mn"), F.lit(0)) == 0
-            terms.append(_nullext(d.filter(keep).drop(*aux_cols)))
-        if dr is not None:
-            # bracket 2: keys whose match count flipped 0 ↔ positive
-            # re-state A_old = A_new − ΔA: a key gaining its first
-            # match removes its rows' NULL extensions (__fs = −1), a
-            # key losing its last match restores them (__fs = +1)
-            flips = (
-                counts.filter(
-                    ((F.col("__mo") == 0) & (F.col("__mn") > 0))
-                    | ((F.col("__mo") > 0) & (F.col("__mn") == 0))
-                )
-                .withColumn(
-                    "__fs",
-                    F.when(F.col("__mn") > 0, F.lit(-1)).otherwise(F.lit(1)),
-                )
-                .localCheckpoint(eager=False)
-            )
-            if flips.count():
-                a_cur = self._pruned_current(
-                    self.left,
-                    self.l_on,
-                    flips.select(F.col("__dk").alias(self.l_on)),
-                )
-                t_cur = (
-                    a_cur.join(
-                        F.broadcast(flips),
-                        a_cur[self.l_on] == flips["__dk"],
-                        "inner",
-                    )
-                    .withColumn("__sg", F.col("__fs"))
-                    .drop(*aux_cols, "__fs")
-                )
-                terms.append(_nullext(t_cur))
-                if dl is not None:
-                    t_win = (
-                        dl.join(
-                            F.broadcast(flips),
-                            dl[self.l_on] == flips["__dk"],
-                            "inner",
-                        )
-                        .withColumn("__sg", -F.col("__sg") * F.col("__fs"))
-                        .drop(*aux_cols, "__fs")
-                    )
-                    terms.append(_nullext(t_win))
-        return terms
-
-    def _incremental(self, cur, new) -> dict:
-        if self._pending():
-            return self._full(*new)
-
-        # Bulk guard BEFORE any base read: the changed-key sets are
-        # broadcast below — corpus-sized windows degrade to full.
-        def _one_side(side):
-            table, on, lo, hi = side
-            if hi <= lo:
-                return None
-            d = self._signed_changes(table, lo, hi).localCheckpoint(
-                eager=False
-            )
-            keys = (
-                d.select(on)
-                .filter(F.col(on).isNotNull())
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            if keys.count() > self.max_broadcast_keys:
-                return _BULK
-            return d, keys
-
-        # the two sides' change scans are independent — overlap their
-        # jobs (zone-pruned term construction stays sequential: it
-        # updates the bench-visible prune counters)
-        sides = _pmap(
-            _one_side,
-            [
-                (self.left, self.l_on, cur[0], new[0]),
-                (self.right, self.r_on, cur[1], new[1]),
-            ],
-            workers=2,
-        )
-        if any(s is _BULK for s in sides):
-            return self._full(*new)
-        dl, lkeys = sides[0] if sides[0] is not None else (None, None)
-        dr, rkeys = sides[1] if sides[1] is not None else (None, None)
-        seq = new[0] + new[1]
-        terms = []
-        if dl is not None:
-            # ΔA ⋈ B_new, sign = ΔA's
-            r_sel = self._pruned_current(
-                self.right,
-                self.r_on,
-                lkeys.select(F.col(self.l_on).alias(self.r_on)),
-            )
-            terms.append(
-                dl.join(r_sel, dl[self.l_on] == r_sel[self.r_on], "inner")
-            )
-        if dr is not None:
-            # A_new ⋈ ΔB, sign = ΔB's
-            l_sel = self._pruned_current(
-                self.left,
-                self.l_on,
-                rkeys.select(F.col(self.r_on).alias(self.l_on)),
-            )
-            terms.append(
-                l_sel.join(dr, l_sel[self.l_on] == dr[self.r_on], "inner")
-            )
-        if dl is not None and dr is not None:
-            # − ΔA ⋈ ΔB: the first two terms BOTH count pairs where
-            # both sides changed in this window (ΔA joins B_new which
-            # already contains ΔB's effect, and vice versa) — subtract
-            # one copy with the product sign negated.
-            la = dl.withColumnRenamed("__sg", "__sg_a")
-            rb = dr.withColumnRenamed("__sg", "__sg_b")
-            terms.append(
-                la.join(rb, la[self.l_on] == rb[self.r_on], "inner")
-                .withColumn("__sg", -F.col("__sg_a") * F.col("__sg_b"))
-                .drop("__sg_a", "__sg_b")
-            )
-        if self.how == "left":
-            terms.extend(self._dangling_terms(dl, dr))
-        if not terms:
-            self._write_cursor(new)
-            return {
-                "mode": "delta",
-                "versions": new,
-                "base_version": seq,
-                "groups_refreshed": 0,
-            }
-        contrib = terms[0]
-        for t in terms[1:]:
-            contrib = contrib.unionByName(t)
-        for c, e in self.group_exprs.items():
-            contrib = contrib.withColumn(c, F.expr(e))
-        if self._aux:
-            # the aux transitions re-read the contribution union once
-            # per distinct column — materialize the term joins once
-            contrib = contrib.localCheckpoint(eager=False)
-        delta = (
-            contrib.groupBy(*self.group_cols)
-            .agg(*self._delta_window_agg_cols(F.col("__sg")))
-            .localCheckpoint(eager=False)
-        )
-        n_touched = delta.count()
-        if not n_touched:
-            self._write_cursor(new)
-            return {
-                "mode": "delta",
-                "versions": new,
-                "base_version": seq,
-                "groups_refreshed": 0,
-            }
-        if n_touched > self.max_broadcast_keys:
-            return self._full(*new)
-        # count(DISTINCT) aux stores merge the SAME signed contribution
-        # union the main delta aggregated
-        delta = self._apply_distinct_deltas(
-            delta, contrib, F.col("__sg"), seq
-        )
-        if delta is None:
-            return self._full(*new)
-        ref = self._aggregate(
-            self._joined(self.left.read().limit(0), self.right.read().limit(0)),
-            0,
-        ).schema
-
-        def _recompute(groups: DataFrame, s: int) -> DataFrame:
-            # join-side extremum repair: re-aggregate exactly these
-            # groups from the CURRENT join, each side zone-pruned by
-            # the physical group columns it owns (advisory; the
-            # group semi-join keeps the result exact)
-            phys = [c for c in self.group_cols if c not in self.group_exprs]
-            ln, rn = self.left.read(), self.right.read()
-            l_rec = _zone_pruned_rows(
-                self.left, groups, [c for c in phys if c in ln.columns]
-            )
-            r_rec = _zone_pruned_rows(
-                self.right, groups, [c for c in phys if c in rn.columns]
-            )
-            joined = self._joined(
-                l_rec if l_rec is not None else ln,
-                r_rec if r_rec is not None else rn,
-            )
-            return self._aggregate(
-                _semi_on_groups(joined, groups, self.group_cols), s
-            )
-
-        out = self._merge_and_publish(
-            delta,
-            n_touched,
-            seq,
-            ref,
-            lambda: self._write_cursor(new),
-            recompute=_recompute,
-        )
-        if out is None:
-            return self._full(*new)
-        out.update({"mode": "delta", "versions": new, "base_version": seq})
-        return out
-
-
 # --- N-table chain/star join views --------------------------------------------
 
 
 class ChainMaterializedView:
-    """GROUP BY over an N-table inner equi-join TREE — chain
+    """GROUP BY over an N-table equi-join TREE — chain
     (``T0 JOIN T1 ON T0.fk0 = T1.k1 JOIN T2 ON T1.fk1 = T2.k2``),
     star (every fk on the fact), or snowflake (each join's left column
     may belong to ANY earlier table) — incrementally maintained from
-    EVERY table's change feed: the n-way generalization of
-    :class:`JoinMaterializedView`.
+    EVERY table's change feed. :class:`JoinMaterializedView` is its
+    n = 2 form under the 2-table signature.
 
     Maintenance is affected-group recompute lifted to the chain:
 
-    1. Each changed table Ti reduces its window to the DISTINCT record
-       keys touched (∝ its change set).
+    1. Each changed table reduces its window to a DISTINCT key set
+       (∝ its change set): the fact to its record keys, a dimension
+       Ti to the values its join column carried in either image.
     2. Those keys propagate DOWN the chain to the fact: changed T2
-       keys select the T1 rows that reference them (semi-join), whose
-       keys select the referencing fact rows — each hop is one
-       semi-join whose leaf key set is broadcast and whose
-       intermediate results stay distributed (AQE picks the strategy;
-       an intermediate neighborhood is NOT driver-bounded).
+       join values select the T1 rows that reference them
+       (semi-join), whose join values select the referencing fact
+       rows — each hop is one semi-join whose leaf key set is
+       broadcast and whose intermediate results stay distributed (AQE
+       picks the strategy; an intermediate neighborhood is NOT
+       driver-bounded).
     3. Touched groups = group values of the joined AFFECTED fact rows
        in the NEW state ∪ the OLD state (as-of snapshots at the
        previous cursor — catches groups that only lost rows, e.g. a
@@ -2154,10 +1428,14 @@ class ChainMaterializedView:
     and the LEFT ``_joined`` makes old∪new touched-group discovery see
     NULL-group transitions. The one semantics-sensitive piece is SCAN
     PRUNING: dropping a row from any table on a LEFT-reachable path
-    flips downstream rows into the NULL group instead of removing
-    them, so zone/fk pruning is disabled for every table whose path to
-    the fact crosses a LEFT hop (``_left_tainted``); inner-path tables
-    and the fact itself keep their pruning. NOTE: a LEFT hop followed
+    flips downstream rows into the NULL extension instead of removing
+    them. Zone pruning a table by its OWN group
+    columns stays exact: a flipped row carries NULL in every one of
+    them, and a NULL touched value disables that column's pruning, so
+    a flipped row can never land in a refreshed group. FK-propagated
+    fact pruning has no such argument (it would drop dangling facts
+    from a touched NULL group) and is off whenever any hop is LEFT.
+    NOTE: a LEFT hop followed
     by an INNER hop THROUGH the nullable side re-drops the dangling
     rows (SQL semantics — spell both hops LEFT for a nullable chain).
 
@@ -2232,16 +1510,6 @@ class ChainMaterializedView:
                     f"earlier table (found in {owners})"
                 )
             self._owner.append(owners[0])
-        # A table is LEFT-tainted when any hop on its path to the fact
-        # is LEFT: pruning a tainted table's rows would flip facts into
-        # the NULL group instead of excluding them, so tainted tables
-        # never zone/fk-prune their recompute scans (discovery pruning
-        # by the affected facts' own key neighborhoods stays lossless).
-        self._left_tainted = [False] * len(tables)
-        for j in range(len(self.on)):
-            self._left_tainted[j + 1] = (
-                self.hows[j] == "left" or self._left_tainted[self._owner[j]]
-            )
         self.spark: SparkSession = tables[0].spark
         self.path = path
         self.group_cols = list(group_cols)
@@ -2341,19 +1609,35 @@ class ChainMaterializedView:
         }
 
     def _changed_keys(self, i: int, cur, new) -> DataFrame | None:
-        """Distinct FULL record-key tuples of table i's change window,
-        or None when that table did not move. All key components are
-        carried (aliased ``__ck_<j>``): keying on the leading component
-        alone would collapse distinct composite-key rows sharing it,
-        silently omitting their groups from the touched set (r11
-        ADVICE, medium)."""
+        """Distinct key set of table i's change window, or None when
+        that table did not move.
+
+        The fact (i = 0) yields its FULL record-key tuples (aliased
+        ``__ck_<j>``): keying on the leading component alone would
+        collapse distinct composite-key rows sharing it, silently
+        omitting their groups from the touched set (r11 ADVICE,
+        medium). A dimension yields the non-NULL values of the column
+        its hop joins on, over pre AND post images (aliased ``__pv``):
+        exactly the values the changed rows carried in the old or the
+        new state, so the walk toward the fact needs no scan of the
+        dimension itself. A row absent from one state (an insert
+        walked in the old state, a delete in the new) still names the
+        facts whose NULL-group membership flipped under a LEFT hop;
+        NULL join values match nothing."""
         if new[i] <= cur[i]:
             return None
         t = self.tables[i]
-        kcs = list(t.spec.record_key)
+        if i == 0:
+            kcs = list(t.spec.record_key)
+            return (
+                t.table_changes(cur[i], new[i])
+                .select(*[F.col(c).alias(f"__ck_{j}") for j, c in enumerate(kcs)])
+                .distinct()
+            )
         return (
-            t.table_changes(cur[i], new[i])
-            .select(*[F.col(c).alias(f"__ck_{j}") for j, c in enumerate(kcs)])
+            t.table_changes(cur[i], new[i], include_preimage=True)
+            .select(F.col(self.on[i - 1][1]).alias("__pv"))
+            .filter(F.col("__pv").isNotNull())
             .distinct()
         )
 
@@ -2371,55 +1655,29 @@ class ChainMaterializedView:
         return frame.join(F.broadcast(keys), cond, "left_semi")
 
     def _affected_facts(
-        self,
-        frames: list[DataFrame],
-        i: int,
-        keys: DataFrame,
-        win_vals: DataFrame | None = None,
+        self, frames: list[DataFrame], i: int, keys: DataFrame
     ) -> DataFrame:
         """Fact rows (frames[0]) whose join path reaches table i's
-        changed keys, in the given state: propagate the key set down
-        the chain with one semi-join per hop — the LEAF set is
-        broadcast, intermediate neighborhoods stay distributed.
-
-        ``win_vals`` (the change WINDOW's join-value set for the hop
-        binding table i) augments the first hop: a row absent from
-        this state — a dim INSERT walked in the old state, a dim
-        DELETE walked in the new — still names the join values whose
-        facts changed membership. Inner chains never needed this
-        (facts at a matchless key contribute nothing), but under LEFT
-        hops those facts sit in the NULL group, and missing them here
-        leaves the NULL group un-recomputed (stale adoption/dangling).
-        Harmless superset for inner chains."""
+        changed keys (:meth:`_changed_keys`) in the given state:
+        propagate the key set down the chain with one semi-join per
+        hop — the LEAF set is broadcast, intermediate neighborhoods
+        stay distributed."""
         if i == 0:
             return self._key_semi(
                 frames[0], list(self.tables[0].spec.record_key), keys
             )
-        # select table-i rows bearing the changed keys, then walk the
-        # attachment structure toward the fact: the join that bound
-        # table `cur` lives at index cur-1, and its left column's
+        # walk the attachment structure toward the fact: the join that
+        # bound table `cur` lives at index cur-1, and its left column's
         # OWNER is the next table holding referencing rows
-        x = self._key_semi(
-            frames[i], list(self.tables[i].spec.record_key), keys
-        )
-        cur = i
-        first = True
-        while cur != 0:
-            j = cur - 1
-            lcol, rcol = self.on[j]
-            a = self._owner[j]
-            vals = x.select(F.col(rcol).alias("__pv"))
-            if first and win_vals is not None:
-                vals = vals.unionByName(
-                    win_vals.select(F.col(rcol).alias("__pv"))
-                )
-            vals = vals.distinct()
-            x = frames[a].join(
-                vals, frames[a][lcol] == vals["__pv"], "left_semi"
-            )
-            first = False
+        vals, cur = F.broadcast(keys), i
+        while True:
+            lcol = self.on[cur - 1][0]
+            a = self._owner[cur - 1]
+            x = frames[a].join(vals, frames[a][lcol] == vals["__pv"], "left_semi")
+            if a == 0:
+                return x
+            vals = x.select(F.col(self.on[a - 1][1]).alias("__pv")).distinct()
             cur = a
-        return x
 
     def _pruned_dims(
         self, affected: DataFrame, frames: list[DataFrame]
@@ -2441,23 +1699,18 @@ class ChainMaterializedView:
         return pruned
 
     def _touched_groups(
-        self,
-        frames: list[DataFrame],
-        changed: list[DataFrame | None],
-        changed_vals: list[DataFrame | None] | None = None,
+        self, frames: list[DataFrame], changed: list[DataFrame | None]
     ) -> DataFrame | None:
         affected = None
         for i, keys in enumerate(changed):
             if keys is None:
                 continue
-            wv = changed_vals[i] if changed_vals is not None else None
-            s = self._affected_facts(frames, i, keys, win_vals=wv)
+            s = self._affected_facts(frames, i, keys)
             affected = s if affected is None else affected.unionByName(s)
         if affected is None:
             return None
-        affected = affected.dropDuplicates(
-            list(self.tables[0].spec.record_key)
-        )
+        # a fact reached from two changed tables appears twice; the
+        # group projection below is distinct, so no dedup pass is needed
         return (
             self._joined(self._pruned_dims(affected, frames))
             .select(*self.group_cols)
@@ -2533,27 +1786,12 @@ class ChainMaterializedView:
                 "base_version": sum(new),
                 "groups_refreshed": 0,
             }
-        # LEFT-tainted changed dims also propagate their change
-        # WINDOW's join values: rows absent from one state (inserts
-        # walked old, deletes walked new) still name the facts whose
-        # NULL-group membership flipped (_affected_facts docstring)
-        changed_vals: list[DataFrame | None] = [None] * len(self.tables)
-        for i in range(1, len(self.tables)):
-            if changed[i] is not None and self._left_tainted[i]:
-                rcol = self.on[i - 1][1]
-                changed_vals[i] = (
-                    self.tables[i]
-                    .table_changes(cur[i], new[i], include_preimage=True)
-                    .select(rcol)
-                    .distinct()
-                    .localCheckpoint(eager=False)
-                )
         now = [t.read() for t in self.tables]
         old = [
             t.read_as_of(cur[i]) for i, t in enumerate(self.tables)
         ]
-        tg_new = self._touched_groups(now, changed, changed_vals)
-        tg_old = self._touched_groups(old, changed, changed_vals)
+        tg_new = self._touched_groups(now, changed)
+        tg_old = self._touched_groups(old, changed)
         touched = tg_new if tg_old is None else tg_new.unionByName(tg_old)
         touched = touched.distinct().localCheckpoint(eager=False)
         n_touched = touched.count()
@@ -2569,32 +1807,25 @@ class ChainMaterializedView:
             return self._full(new)
         seq = sum(new)
         # Zone-prune each table's recompute scan by the physical group
-        # columns it owns (lossless on all-inner paths; LEFT-tainted
-        # tables are skipped below — the semi-join after the join
-        # keeps the result exact either way).
+        # columns it owns (advisory; the semi-join after the join keeps
+        # the result exact, LEFT-tainted tables included — class
+        # docstring).
         phys = [c for c in self.group_cols if c not in self.group_exprs]
         buckets = _bucket_prunable(self.group_exprs)
         rec, pruned_direct = [], []
         for i, t in enumerate(self.tables):
-            # a LEFT-tainted table never prunes: dropping its rows
-            # would flip downstream facts into the NULL group instead
-            # of excluding them (class docstring)
-            pr = (
-                None
-                if self._left_tainted[i]
-                else _zone_pruned_rows(
-                    t,
-                    touched,
-                    [c for c in phys if c in now[i].columns],
-                    bucket_cols=buckets,
-                )
+            pr = _zone_pruned_rows(
+                t,
+                touched,
+                [c for c in phys if c in now[i].columns],
+                bucket_cols=buckets,
             )
             rec.append(pr if pr is not None else now[i])
             pruned_direct.append(pr is not None)
         if (
             not pruned_direct[0]
             and not self.group_exprs
-            and not any(self._left_tainted)
+            and "left" not in self.hows
         ):
             fact_pr = self._fk_pruned_fact(now, touched, phys)
             if fact_pr is not None:
@@ -2625,36 +1856,109 @@ def attach_chain_matview_maintenance(view: ChainMaterializedView) -> None:
         t.add_maintenance_hook(chain_refresh)
 
 
+class JoinMaterializedView(ChainMaterializedView):
+    """``SELECT group_cols, aggs FROM left [LEFT] JOIN right ON
+    left.lk = right.rk GROUP BY group_cols``: the n = 2
+    :class:`ChainMaterializedView` under its 2-table signature.
+
+    A dimension-side update MOVES every joined fact row between
+    groups, and a fact-side delete shrinks a group it never names —
+    the chain's old ∪ new touched-group discovery covers both. Under
+    ``how="left"`` a NEW right row for key k moves k's left rows from
+    the NULL group to a value group; k's facts are affected in both
+    states, so both groups refresh. The cursor (``v0 v1 tok0 tok1`` in
+    ``.mv/_BASE_VERSIONS``) is the chain's, so a store written by
+    either class resumes incrementally under the other."""
+
+    def __init__(
+        self,
+        left: KeyedTable,
+        right: KeyedTable,
+        path: str,
+        on: tuple[str, str],
+        group_cols: list[str],
+        aggs: dict[str, str],
+        name: str = "join_matview",
+        how: str = "inner",
+        max_broadcast_keys: int = 1_000_000,
+        group_exprs: dict[str, str] | None = None,
+        store_retain_versions: int = 0,
+        store_hash_buckets: int = 0,
+    ):
+        super().__init__(
+            [left, right],
+            [on],
+            path,
+            group_cols,
+            aggs,
+            name=name,
+            max_broadcast_keys=max_broadcast_keys,
+            group_exprs=group_exprs,
+            store_retain_versions=store_retain_versions,
+            store_hash_buckets=store_hash_buckets,
+            hows=[how],
+        )
+
+
 class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
-    """GROUP BY over an N-table inner equi-join tree, maintained by
-    SIGNED DELTA MERGE — the N-way generalization of
-    :class:`DeltaJoinMaterializedView` via inclusion–exclusion over
-    the changed tables:
+    """GROUP BY over an N-table equi-join tree, maintained by SIGNED
+    DELTA MERGE — join bilinearity generalized by inclusion–exclusion
+    over the changed tables:
 
         Δ(T1 ⋈ … ⋈ Tn) = Σ_{∅≠S⊆changed} (−1)^{|S|+1} ·
                           ⋈_i (ΔTi if i∈S else Ti_new)
 
     (expand ⋈(Ti_new − ΔTi) and subtract — every non-delta factor is
     the CURRENT state, so no as-of reads; each term's per-row sign is
-    (−1)^{|S|+1} times the product of its deltas' image signs). With k
-    changed tables the window costs 2^k − 1 terms — one per table in
-    the overwhelmingly common single-feed refresh — and every term is
-    a join of change windows against NEIGHBORHOOD-PRUNED current
-    states: restrictions propagate from each delta both toward the
-    fact and away from it (one exact semi-join per hop, zone-map file
-    pruning where the reached key set is small enough to enumerate),
-    so refresh I/O ∝ the change set's join neighborhoods — never any
-    corpus and never a touched group's full rows (the chain recompute
-    class re-joins every row of every touched group; a far-dim rename
-    over a billion-row group re-aggregates the billion rows there,
-    and only the net signed contributions here).
+    (−1)^{|S|+1} times the product of its deltas' image signs). For
+    n = 2 this is Δ(A⋈B) = ΔA⋈B_new + A_new⋈ΔB − ΔA⋈ΔB: the third
+    term subtracts the window×window pairs the first two both count.
+    With k changed tables the window costs 2^k − 1 terms — one per
+    table in the overwhelmingly common single-feed refresh — and every
+    term is a join of change windows against NEIGHBORHOOD-PRUNED
+    current states: restrictions propagate from each delta both toward
+    the fact and away from it (one exact semi-join per hop, broadcast
+    when its key set comes straight from a change window, zone-map
+    file pruning where the reached key set is small enough to
+    enumerate), so refresh I/O ∝ the change set's join neighborhoods —
+    never any corpus and never a touched group's full rows (the
+    recompute class re-joins every row of every touched group; a
+    far-dim rename over a billion-row group re-aggregates the billion
+    rows there, and only the net signed contributions here).
 
-    Same constraints and protocol as the 2-table delta-join class:
-    inner joins, invertible aggregates (sum/count/avg, plus min/max
-    with join-side extremum repair — see that class's sign-pairing
-    argument for why net-zero pairs cannot corrupt a merged extremum),
-    disjoint column names, intent-marker crash protocol, bulk
-    degradation, NULL-sum semantics, bucketed-store merge pruning.
+    LEFT joins (``hows=["left"]``; exactly 2 tables) are maintained as
+    inner + DANGLING corrections. A left join is the inner join plus
+    every unmatched left row extended with NULLs; the inner part is
+    bilinear as above, and the dangling part
+
+        D(A, B) = Σ_{a ∈ A} [match_B(a.key) = 0] · nullext(a)
+
+    moves only where a key's match COUNT transitions 0 ↔ positive:
+
+        ΔD = [D(A_new,B_new) − D(A_old,B_new)]   (ΔA at B_new)
+           + [D(A_old,B_new) − D(A_old,B_old)]   (flip keys × A_old)
+
+    The first bracket keeps exactly the ΔA rows whose key is matchless
+    at B_NEW (both signs — the bracket holds B fixed at its new
+    state); the second re-states A_old = A_new − ΔA over the keys
+    whose match count flipped. match_new comes from the current right
+    side PRUNED to the window's keys; match_old = match_new − Δmatch
+    is pure window arithmetic — no as-of reads, I/O still ∝ the change
+    neighborhoods. NULL left keys never match, so they ride the first
+    bracket with both indicators true.
+
+    Requirements: invertible aggregates (sum/count/avg, plus min/max
+    with JOIN-SIDE extremum repair — groups where a removed
+    contribution tied-or-beat the stored extremum re-aggregate from
+    the current join, zone-pruned and group-restricted; a pair that
+    nets to zero across the inclusion–exclusion terms appears with
+    BOTH signs, so any spurious added-instance that could corrupt a
+    merged extremum is accompanied by a removed-instance that forces
+    the repair instead); pairwise-disjoint column names; same
+    intent-marker crash protocol, bulk-rewrite degradation, NULL-sum
+    semantics, and hash-bucketed store pruning as the single-table
+    delta class. :class:`DeltaJoinMaterializedView` is the n = 2 form
+    under the 2-table signature.
     """
 
     def __init__(
@@ -2669,6 +1973,7 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         group_exprs: dict[str, str] | None = None,
         store_retain_versions: int = 0,
         store_hash_buckets: int = 0,
+        hows: list[str] | None = None,
     ):
         self._parsed = _parse_invertible_aggs(
             aggs, allow_extrema=True, allow_distinct=True
@@ -2684,7 +1989,16 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
             group_exprs=group_exprs,
             store_retain_versions=store_retain_versions,
             store_hash_buckets=store_hash_buckets,
+            hows=hows,
         )
+        if "left" in self.hows and len(self.tables) != 2:
+            # the dangling corrections are derived for one hop; an
+            # N-table inclusion–exclusion term has no NULL extension
+            raise ValueError(
+                "LEFT joins are not supported with delta maintenance in "
+                "N-table chains — a LEFT hop needs exactly 2 tables (use "
+                "the recompute chain, or a single LEFT JOIN)"
+            )
         _require_disjoint_columns(tables)
         self._init_aux_stores(path, name, group_cols, store_hash_buckets)
 
@@ -2713,10 +2027,28 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         ).otherwise(F.lit(-1))
         return ch.withColumn(f"__sg_{i}", sign).drop("_change_type")
 
+    def _pruned_current(
+        self,
+        table: KeyedTable,
+        key_col: str,
+        keys: DataFrame,
+        rows: DataFrame,
+        broadcast: bool = True,
+    ) -> DataFrame:
+        """``table``'s current snapshot ``rows`` restricted to ``keys``
+        (one column named ``key_col``): advisory zone-map file pruning
+        on the join-key column first (files opened ∝ the keys' zones
+        when a sidecar exists), then the exact key semi-join either
+        way."""
+        pr = _zone_pruned_rows(table, keys, [key_col])
+        return _semi_on_keys(rows if pr is None else pr, key_col, keys, broadcast)
+
     def _term(self, S: frozenset, deltas: list, now: list) -> DataFrame:
         """One inclusion–exclusion term: the chain joined with ΔTi at
         the positions in S and the neighborhood-pruned current state
-        everywhere else, rows signed (−1)^{|S|+1}·Π __sg_i."""
+        everywhere else, rows signed (−1)^{|S|+1}·Π __sg_i. Every hop
+        is an inner join: LEFT views add their NULL extensions through
+        _dangling_terms."""
         n = len(self.tables)
         # None marks a PRISTINE current position — zone-map file
         # pruning is only possible before any transformation.
@@ -2725,15 +2057,18 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         ]
         restricted = [i in S for i in range(n)]
 
-        def restrict(i: int, keys: DataFrame, col: str) -> None:
-            # keys carries exactly one column named `col`
+        def restrict(i: int, keys: DataFrame, col: str, src: int) -> None:
+            # keys carries exactly one column named `col`, read off
+            # position src; a change window's own key set is bounded
+            # by the bulk guard, so its semi-join broadcasts (a shuffle
+            # there would exchange the corpus every refresh)
+            bounded = src in S
             if frames[i] is None:
-                pr = _zone_pruned_rows(self.tables[i], keys, [col])
-                frames[i] = pr if pr is not None else now[i]
-            ks = keys.select(F.col(col).alias("__rk")).distinct()
-            frames[i] = frames[i].join(
-                ks, frames[i][col] == ks["__rk"], "left_semi"
-            )
+                frames[i] = self._pruned_current(
+                    self.tables[i], col, keys, now[i], broadcast=bounded
+                )
+            else:
+                frames[i] = _semi_on_keys(frames[i], col, keys, bounded)
             restricted[i] = True
 
         # far → near: every restricted table narrows its owner (a row
@@ -2743,14 +2078,14 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
             if not restricted[j + 1]:
                 continue
             lcol, rcol = self.on[j]
-            keys = frames[j + 1].select(F.col(rcol).alias(lcol)).distinct()
-            restrict(self._owner[j], keys, lcol)
+            keys = frames[j + 1].select(F.col(rcol).alias(lcol))
+            restrict(self._owner[j], keys, lcol, j + 1)
         # near → far: restricted owners narrow still-pristine children
         for j, (lcol, rcol) in enumerate(self.on):
             a = self._owner[j]
             if restricted[a] and not restricted[j + 1]:
-                keys = frames[a].select(F.col(lcol).alias(rcol)).distinct()
-                restrict(j + 1, keys, rcol)
+                keys = frames[a].select(F.col(lcol).alias(rcol))
+                restrict(j + 1, keys, rcol, a)
         out = frames[0] if frames[0] is not None else now[0]
         for (fk, k), i in zip(self.on, range(1, n)):
             d = frames[i] if frames[i] is not None else now[i]
@@ -2761,6 +2096,116 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         return out.withColumn("__sg", sign).drop(
             *[f"__sg_{i}" for i in S]
         )
+
+    def _dangling_terms(self, deltas: list, now: list) -> list[DataFrame]:
+        """Signed NULL-extension contributions of a 2-table LEFT view
+        (class docstring): ΔA rows dangling at B_new, plus A_old rows
+        at keys whose match count flipped 0 ↔ positive — both as
+        left-row frames with every right column NULLed, so they union
+        with the inner terms and feed the same grouped delta. Reads ∝
+        the window's key neighborhoods (pruned current snapshots);
+        match_old is window arithmetic, never an as-of."""
+        dl, dr = (
+            None if d is None else d.withColumnRenamed(f"__sg_{i}", "__sg")
+            for i, d in enumerate(deltas)
+        )
+        if dl is None and dr is None:
+            return []
+        (l_on, r_on), (left, right) = self.on[0], self.tables
+        terms: list[DataFrame] = []
+        rfields = now[1].schema.fields
+
+        def _nullext(aframe: DataFrame) -> DataFrame:
+            for f in rfields:
+                aframe = aframe.withColumn(f.name, F.lit(None).cast(f.dataType))
+            return aframe
+
+        keyfs = [
+            d.select(F.col(on).alias("__dk"))
+            for d, on in ((dl, l_on), (dr, r_on))
+            if d is not None
+        ]
+        keys = keyfs[0] if len(keyfs) == 1 else keyfs[0].unionByName(keyfs[1])
+        keys = (
+            keys.filter(F.col("__dk").isNotNull())
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        # match_new per key from the pruned current right side;
+        # match_old = match_new − Δmatch (signed window count)
+        cur_r = self._pruned_current(
+            right, r_on, keys.select(F.col("__dk").alias(r_on)), now[1]
+        )
+        mn = (
+            cur_r.groupBy(r_on)
+            .agg(F.count(F.lit(1)).alias("__mn"))
+            .select(F.col(r_on).alias("__dk"), "__mn")
+        )
+        counts = keys.join(F.broadcast(mn), "__dk", "left").withColumn(
+            "__mn", F.coalesce("__mn", F.lit(0).cast("long"))
+        )
+        if dr is not None:
+            dm = (
+                dr.groupBy(r_on)
+                .agg(F.sum("__sg").alias("__dm"))
+                .select(F.col(r_on).alias("__dk"), "__dm")
+            )
+            counts = counts.join(F.broadcast(dm), "__dk", "left").withColumn(
+                "__dm", F.coalesce("__dm", F.lit(0).cast("long"))
+            )
+        else:
+            counts = counts.withColumn("__dm", F.lit(0).cast("long"))
+        counts = counts.withColumn(
+            "__mo", F.col("__mn") - F.col("__dm")
+        ).localCheckpoint(eager=False)
+        aux_cols = ["__dk", "__mn", "__dm", "__mo"]
+        if dl is not None:
+            # bracket 1 is evaluated ENTIRELY at B_new — both signs
+            # check match_new (a removed image whose key was matched
+            # only in the OLD state is bracket 2's business, restated
+            # through A_old = A_new − ΔA). A NULL key misses the
+            # counts join and coalesces to 0 matches (never matches).
+            d = dl.join(F.broadcast(counts), dl[l_on] == counts["__dk"], "left")
+            keep = F.coalesce(F.col("__mn"), F.lit(0)) == 0
+            terms.append(_nullext(d.filter(keep).drop(*aux_cols)))
+        if dr is not None:
+            # bracket 2: keys whose match count flipped 0 ↔ positive
+            # re-state A_old = A_new − ΔA: a key gaining its first
+            # match removes its rows' NULL extensions (__fs = −1), a
+            # key losing its last match restores them (__fs = +1)
+            flips = (
+                counts.filter(
+                    ((F.col("__mo") == 0) & (F.col("__mn") > 0))
+                    | ((F.col("__mo") > 0) & (F.col("__mn") == 0))
+                )
+                .withColumn(
+                    "__fs",
+                    F.when(F.col("__mn") > 0, F.lit(-1)).otherwise(F.lit(1)),
+                )
+                .localCheckpoint(eager=False)
+            )
+            if flips.count():
+                a_cur = self._pruned_current(
+                    left, l_on, flips.select(F.col("__dk").alias(l_on)), now[0]
+                )
+                t_cur = (
+                    a_cur.join(
+                        F.broadcast(flips), a_cur[l_on] == flips["__dk"], "inner"
+                    )
+                    .withColumn("__sg", F.col("__fs"))
+                    .drop(*aux_cols, "__fs")
+                )
+                terms.append(_nullext(t_cur))
+                if dl is not None:
+                    t_win = (
+                        dl.join(
+                            F.broadcast(flips), dl[l_on] == flips["__dk"], "inner"
+                        )
+                        .withColumn("__sg", -F.col("__sg") * F.col("__fs"))
+                        .drop(*aux_cols, "__fs")
+                    )
+                    terms.append(_nullext(t_win))
+        return terms
 
     def _incremental(self, cur, new) -> dict:
         if self._pending():
@@ -2797,6 +2242,8 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         for k in range(1, len(changed) + 1):
             for S in combinations(changed, k):
                 terms.append(self._term(frozenset(S), deltas, now))
+        if "left" in self.hows:  # 2 tables (constructor)
+            terms.extend(self._dangling_terms(deltas, now))
         contrib = terms[0]
         for t in terms[1:]:
             contrib = contrib.unionByName(t)
@@ -2859,3 +2306,38 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
             return self._full(new)
         out.update({"mode": "delta", "versions": new, "base_version": seq})
         return out
+
+
+class DeltaJoinMaterializedView(DeltaChainMaterializedView):
+    """GROUP BY over a 2-table inner or LEFT equi-join, maintained by
+    signed delta merge: the n = 2 :class:`DeltaChainMaterializedView`
+    under the 2-table signature (same cursor and store layout)."""
+
+    def __init__(
+        self,
+        left: KeyedTable,
+        right: KeyedTable,
+        path: str,
+        on: tuple[str, str],
+        group_cols: list[str],
+        aggs: dict[str, str],
+        name: str = "delta_join_matview",
+        how: str = "inner",
+        max_broadcast_keys: int = 1_000_000,
+        group_exprs: dict[str, str] | None = None,
+        store_retain_versions: int = 0,
+        store_hash_buckets: int = 0,
+    ):
+        super().__init__(
+            [left, right],
+            [on],
+            path,
+            group_cols,
+            aggs,
+            name=name,
+            max_broadcast_keys=max_broadcast_keys,
+            group_exprs=group_exprs,
+            store_retain_versions=store_retain_versions,
+            store_hash_buckets=store_hash_buckets,
+            hows=[how],
+        )

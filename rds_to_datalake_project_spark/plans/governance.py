@@ -1361,7 +1361,7 @@ def join_matview_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _join_matview_fixture(spark: SparkSession, sf_dir: str):
     from rds_to_datalake_project_spark.operators.matview import (
         JoinMaterializedView,
-        attach_join_matview_maintenance,
+        attach_chain_matview_maintenance,
     )
 
     root = _scratch("join_matview")
@@ -1408,7 +1408,7 @@ def _join_matview_fixture(spark: SparkSession, sf_dir: str):
             ),
         },
     )
-    attach_join_matview_maintenance(view)
+    attach_chain_matview_maintenance(view)
     k = F.col("o_orderkey")
     o.upsert(  # fact side: reprice one class, delete another
         o_base.filter((k % 5 == 0) & (k % 7 != 0))
@@ -1474,7 +1474,7 @@ def left_join_matview_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _left_jmv_fixture(spark: SparkSession, sf_dir: str):
     from rds_to_datalake_project_spark.operators.matview import (
         JoinMaterializedView,
-        attach_join_matview_maintenance,
+        attach_chain_matview_maintenance,
     )
 
     root = _scratch("left_jmv")
@@ -1522,7 +1522,7 @@ def _left_jmv_fixture(spark: SparkSession, sf_dir: str):
         },
         how="left",
     )
-    attach_join_matview_maintenance(view)
+    attach_chain_matview_maintenance(view)
     # one commit per side: delete an order class; re-key one customer
     # class AWAY (its orders now dangle → NULL nation) — the view must
     # move those orders into the NULL group incrementally

@@ -56,6 +56,14 @@ _PRIORITY = (
     "matview_rewrite_hierarchy",
     "q6_forecast_revenue",
     "restore_table_roundtrip",
+    # --- tier A': the four join-view rows whose maintainer was folded
+    # into the n-table chain classes (2-table views are now n = 2
+    # chains). They displace q1/q3/q5/top_customers_per_nation, green
+    # in every round they were checked (r1-r13).
+    "chain_matview_region_revenue",
+    "delta_join_matview_nation_revenue",
+    "join_matview_nation_revenue",
+    "left_join_matview_revenue",
     # --- tier B (r13): the r8 stale tier (5) — the queries that yielded
     # their r12 slots to the new services, owed per the r12 registry
     # comment and r12 VERDICT "Next round" #9.
@@ -64,9 +72,9 @@ _PRIORITY = (
     "mixture_sample_counts",
     "sketch_cms_after_cdc_md5",
     "weighted_sample_docs",
-    # --- tier C (r13): the full r9 stale tier (31) — with tiers A+B
-    # this retires ALL pre-r10 rotation debt in one window (r12 VERDICT
-    # "Next round" #9's done-criterion).
+    # --- tier C (r13): the r9 stale tier (31 in r13, 27 after tier A') —
+    # with tiers A+B this retired ALL pre-r10 rotation debt in one
+    # window (r12 VERDICT "Next round" #9's done-criterion).
     "above_brand_average_parts",
     "audio_hash_neardups",
     "balance_quartiles_by_nation",
@@ -88,15 +96,11 @@ _PRIORITY = (
     "overlap_user_promo_spans",
     "pagerank_trade_graph",
     "pivot_nation_priority_revenue",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
     "revenue_cube",
     "rolling_anomaly_hours",
     "scd2_store_incremental",
     "table_diff_report",
     "time_weighted_value",
-    "top_customers_per_nation",
     "unpivot_roundtrip",
     # --- tier D: core CDC/SQL round-trips — kept in-window every round
     # (the reference's §2 heart; cheap insurance). Trimmed to 4 this

@@ -264,18 +264,12 @@ def attach_meta(mv, m: re.Match) -> None:
     the view object (CREATE MATERIALIZED VIEW calls this). Views built
     programmatically carry no meta and are never rewrite candidates.
     """
-    gd = m.groupdict()
     base = _unq(m.group("base"))
-    if gd.get("joins"):
+    if m.group("joins"):
         hops = _canon_hops(m.group("joins"))
         if hops is None:  # never expected — the CREATE regex vetted it
             return
         frm = base + hops[0]
-    elif gd.get("right"):
-        how = "left" if (gd.get("jhow") or "").lower().startswith("l") else "inner"
-        frm = f"{base}|{how}:{_unq(m.group('right'))}:" + _on_pair(
-            m.group("lon"), m.group("ron")
-        )
     else:
         frm = base
     mv.rewrite_meta = {
@@ -298,19 +292,14 @@ def _lag(mv) -> int | None:
 
     if isinstance(mv, _SignedDeltaMergeMixin) and mv._pending():
         return None
-    if hasattr(mv, "tables"):
+    tables = getattr(mv, "tables", None)
+    if tables is not None:  # join views: one cursor entry per table
         cur = mv.refreshed_versions()
-        heads = tuple((t.versions() or [0])[-1] for t in mv.tables)
-    elif hasattr(mv, "left"):
-        cur = mv.refreshed_versions()
-        heads = (
-            (mv.left.versions() or [0])[-1],
-            (mv.right.versions() or [0])[-1],
-        )
     else:
+        tables = [mv.base]
         v = mv.refreshed_version()
         cur = None if v is None else (v,)
-        heads = ((mv.base.versions() or [0])[-1],)
+    heads = tuple((t.versions() or [0])[-1] for t in tables)
     if cur is None or any(h < c for h, c in zip(heads, cur)):
         return None
     return sum(h - c for h, c in zip(heads, cur))

@@ -301,28 +301,19 @@ _PURGE_RE = re.compile(
 # Engine extension: incremental materialized views over registered
 # KeyedTables (operators/matview.py) through the SQL layer. The AS
 # body is the maintainable shape — SELECT <group cols + aliased
-# aggregates> FROM <registered table> [JOIN <registered table> ON
-# <l> = <r>] GROUP BY <group cols>; with a JOIN the view becomes a
-# JoinMaterializedView maintained from BOTH tables' change feeds.
+# aggregates> FROM <registered table> [[INNER | LEFT [OUTER]] JOIN
+# <registered table> ON <l> = <r>]... GROUP BY <group cols>. Without
+# a JOIN the view is a single-table MaterializedView; with k JOINs it
+# is the (k+1)-table join view (JoinMaterializedView for one JOIN,
+# ChainMaterializedView beyond), maintained from every joined table's
+# change feed.
 _CREATE_MV_RE = re.compile(
     rf"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+({_QNAME})"
     r"(?:\s+WITH\s+(?P<auto>AUTO\s+)?(?P<delta>DELTA\s+)?REFRESH"
     r"(?:\s+BUCKETS\s+(?P<buckets>\d+))?)?"
     rf"\s+AS\s+SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<base>{_QNAME})"
-    rf"(?:\s+(?:(?P<jhow>INNER|LEFT(?:\s+OUTER)?)\s+)?JOIN\s+(?P<right>{_QNAME})"
-    r"\s+ON\s+(?P<lon>[\w.\"`]+)\s*=\s*(?P<ron>[\w.\"`]+))?"
-    r"\s+GROUP\s+BY\s+(?P<grp>.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# ≥2 JOINs (inner or LEFT [OUTER]) → an N-table chain/star view
-# (ChainMaterializedView); a single JOIN keeps the 2-table class.
-_CREATE_MV_CHAIN_RE = re.compile(
-    rf"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+({_QNAME})"
-    r"(?:\s+WITH\s+(?P<auto>AUTO\s+)?(?P<delta>DELTA\s+)?REFRESH"
-    r"(?:\s+BUCKETS\s+(?P<buckets>\d+))?)?"
-    rf"\s+AS\s+SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<base>{_QNAME})"
     rf"(?P<joins>(?:\s+(?:(?:INNER|LEFT(?:\s+OUTER)?)\s+)?JOIN\s+{_QNAME}"
-    r"\s+ON\s+[\w.\"`]+\s*=\s*[\w.\"`]+){2,})"
+    r"\s+ON\s+[\w.\"`]+\s*=\s*[\w.\"`]+)*)"
     r"\s+GROUP\s+BY\s+(?P<grp>.+?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
@@ -331,13 +322,12 @@ _JOIN_CLAUSE_RE = re.compile(
     rf"JOIN\s+(?P<tbl>{_QNAME})\s+ON\s+(?P<lc>[\w.\"`]+)\s*=\s*(?P<rc>[\w.\"`]+)",
     re.IGNORECASE,
 )
-# Loose pre-match for any multi-join CREATE MATERIALIZED VIEW — used
-# only to turn a shape neither strict regex accepted (e.g. LEFT JOIN
-# in a 3-table chain) into a targeted error instead of a confusing
-# fall-through to plain spark.sql.
+# Loose pre-match for any joined CREATE MATERIALIZED VIEW — used only
+# to turn a shape the strict regex rejected (e.g. a RIGHT or FULL
+# JOIN) into a targeted error instead of a confusing fall-through to
+# plain spark.sql.
 _CREATE_MV_LOOSE_RE = re.compile(
-    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+.+?\sFROM\s.+?"
-    r"\sJOIN\s.+?\sJOIN\s",
+    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+.+?\sFROM\s.+?\sJOIN\s",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -612,92 +602,10 @@ def _split_top_level(text: str) -> list[str]:
     return [p.strip() for p in parts if p.strip()]
 
 
-def _build_join_matview(m, known, base, safe, group_cols, aggs, group_exprs):
-    """The JOIN form of CREATE MATERIALIZED VIEW: resolve the right
-    table, pick the ON sides (qualified names bind explicitly, with
-    membership validated; unqualified names bind by unambiguous
-    membership), and return ``(view, tables_to_hook)`` — the caller
-    wires auto-refresh only after the initial refresh succeeds."""
-    from rds_to_datalake_project_spark.operators.matview import (
-        JoinMaterializedView,
-    )
-
-    base_name = _unquote_ident(m.group("base"))
-    right_name = _unquote_ident(m.group("right"))
-    right = known.get(right_name)
-    if right is None:
-        raise ValueError(
-            f"JOIN table {right_name!r} is not a registered lake table; "
-            f"known: {sorted(known)}"
-        )
-
-    def _side(tok: str) -> tuple[str | None, str]:
-        # split FIRST, strip quoting per part — stripping outer quotes
-        # of "a"."x" before the split would leave a stray quote in the
-        # column name
-        parts = [p.strip().strip('"').strip("`") for p in tok.strip().split(".")]
-        if len(parts) == 2:
-            return parts[0], parts[1]
-        if len(parts) == 1:
-            return None, parts[0]
-        raise ValueError(f"ON identifier {tok!r} is not [table.]column")
-
-    sides = [_side(m.group("lon")), _side(m.group("ron"))]
-    l_cols, r_cols = set(base.read().columns), set(right.read().columns)
-
-    def _belongs_left(q: str | None, c: str) -> bool:
-        if q is not None:
-            if q not in (base_name, right_name):
-                raise ValueError(
-                    f"ON qualifier {q!r} names neither joined table"
-                )
-            cols = l_cols if q == base_name else r_cols
-            if c not in cols:
-                raise ValueError(f"ON column {c!r} is not in table {q!r}")
-            return q == base_name
-        in_l, in_r = c in l_cols, c in r_cols
-        if in_l == in_r:
-            raise ValueError(
-                f"ON column {c!r} is ambiguous or unknown — qualify it "
-                f"({base_name}.{c} / {right_name}.{c})"
-            )
-        return in_l
-    lefts = [_belongs_left(q, c) for q, c in sides]
-    if lefts == [True, False]:
-        on = (sides[0][1], sides[1][1])
-    elif lefts == [False, True]:
-        on = (sides[1][1], sides[0][1])
-    else:
-        raise ValueError("ON must equate one column from each joined table")
-    jhow = (m.group("jhow") or "INNER").upper()
-    how = "left" if jhow.startswith("LEFT") else "inner"
-    # WITH DELTA REFRESH on the JOIN form → signed-delta join
-    # maintenance (Δ(A⋈B) = ΔA⋈B + A⋈ΔB − ΔA⋈ΔB): refresh I/O ∝ the
-    # change set's join neighborhoods. LEFT joins maintain the extra
-    # dangling (NULL-extension) part via match-count transitions;
-    # invertible aggregates only — violations raise here, failing the
-    # CREATE cleanly.
-    if m.group("delta"):
-        from rds_to_datalake_project_spark.operators.matview import (
-            DeltaJoinMaterializedView,
-        )
-
-        cls = DeltaJoinMaterializedView
-    else:
-        cls = JoinMaterializedView
-    mv = cls(
-        base,
-        right,
-        f"{base.path}/.matviews/{safe}",
-        on=on,
-        group_cols=group_cols,
-        aggs=aggs,
-        name=safe,
-        how=how,
-        group_exprs=group_exprs,
-        store_hash_buckets=int(m.group("buckets") or 0),
-    )
-    return mv, [base, right]
+def _mv_tables(mv) -> list:
+    """Base tables of a view: every joined table of a join view, the
+    one base of a single-table view."""
+    return mv.tables if hasattr(mv, "tables") else [mv.base]
 
 
 def _publish_matview(spark: SparkSession, name: str, mv) -> None:
@@ -824,75 +732,22 @@ def _finish_matview_create(spark, m: re.Match, name: str, mv, hooked_tables):
     )
 
 
-def _create_matview_statement(spark: SparkSession, m: re.Match, known: dict):
-    """``CREATE MATERIALIZED VIEW v [WITH AUTO REFRESH] AS SELECT
-    <group cols + aliased aggregates> FROM <registered table>
-    [JOIN <registered table> ON <l> = <r>] GROUP BY <group cols>`` →
-    an incrementally-maintained operators/matview.MaterializedView
-    (JoinMaterializedView for the JOIN form, maintained from BOTH
-    tables' change feeds) stored under the base table's ``.matviews/``
-    directory, initially refreshed, registered for REFRESH/DROP and
-    (for simple names) as a temp view for SELECTs.
-
-    WITH AUTO REFRESH additionally attaches the refresh as a
-    post-commit maintenance hook on the base — the view then follows
-    every upsert with no further statements (advisory slot: a failed
-    refresh leaves the view stale, never wrong).
-    """
-    from rds_to_datalake_project_spark.operators.matview import (
-        MaterializedView,
-    )
-
-    name = _unquote_ident(m.group(1))
-    _validate_mv_name(name)
-    base = known[_unquote_ident(m.group("base"))]
-    group_cols, group_exprs, aggs = _parse_mv_shape(m)
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", name)
-    if m.group("right"):
-        mv, hooked_tables = _build_join_matview(
-            m, known, base, safe, group_cols, aggs, group_exprs
-        )
-    else:
-        from rds_to_datalake_project_spark.operators.matview import (
-            DeltaMaterializedView,
-        )
-
-        # WITH DELTA REFRESH → signed-delta maintenance: refresh I/O ∝
-        # the change window (SUM/COUNT aggregates only — the class
-        # validates and raises here, failing the CREATE cleanly)
-        cls = DeltaMaterializedView if m.group("delta") else MaterializedView
-        mv = cls(
-            base,
-            f"{base.path}/.matviews/{safe}",
-            group_cols,
-            aggs,
-            name=safe,
-            group_exprs=group_exprs,
-            store_hash_buckets=int(m.group("buckets") or 0),
-        )
-        hooked_tables = [base]
-    return _finish_matview_create(spark, m, name, mv, hooked_tables)
-
-
-def _create_chain_matview_statement(spark, m: re.Match, known: dict):
-    """CREATE MATERIALIZED VIEW over ≥3 tables (≥2 inner JOINs) → an
-    incrementally-maintained ChainMaterializedView. Each ON pair is
-    ordered (earlier-table column, new-table column) by qualified
-    binding or unambiguous membership; the view class itself validates
-    the attachment structure (chain / star / snowflake)."""
-    from rds_to_datalake_project_spark.operators.matview import (
-        ChainMaterializedView,
-    )
-
-    name = _unquote_ident(m.group(1))
-    _validate_mv_name(name)
-    base_name = _unquote_ident(m.group("base"))
-    tables = [known[base_name]]
+def _bind_joins(known: dict, base_name: str, joins: str):
+    """Resolve the JOIN tail of a CREATE MATERIALIZED VIEW into
+    ``(tables, on, hows)`` for the join view classes. Each ON pair is
+    ordered (earlier-table column, newly-joined-table column): a
+    qualified name binds to the table it names, which must hold the
+    column; an unqualified name binds by unambiguous membership. The
+    view class itself validates the attachment structure (chain /
+    star / snowflake) and which hops may be LEFT."""
     names = [base_name]
-    cols_sofar = set(tables[0].read().columns)
+    tables = [known[base_name]]
     on: list[tuple[str, str]] = []
     hows: list[str] = []
-    for jm in _JOIN_CLAUSE_RE.finditer(m.group("joins")):
+    if not joins:
+        return tables, on, hows
+    cols = [set(tables[0].read().columns)]
+    for jm in _JOIN_CLAUSE_RE.finditer(joins):
         hows.append(
             "left" if (jm.group("how") or "").upper().startswith("LEFT")
             else "inner"
@@ -904,87 +759,93 @@ def _create_chain_matview_statement(spark, m: re.Match, known: dict):
                 f"JOIN table {rname!r} is not a registered lake table; "
                 f"known: {sorted(known)}"
             )
-        r_cols = set(right.read().columns)
+        names.append(rname)
+        tables.append(right)
+        cols.append(set(right.read().columns))
 
-        def _side(tok: str):
-            parts = [
-                p.strip().strip('"').strip("`")
-                for p in tok.strip().split(".")
-            ]
+        def _side(tok: str) -> tuple[bool, str]:
+            """(names the newly joined table?, column)"""
+            # split FIRST, strip quoting per part — stripping outer
+            # quotes of "a"."x" before the split would leave a stray
+            # quote in the column name
+            parts = [p.strip().strip('"').strip("`") for p in tok.strip().split(".")]
             if len(parts) == 2:
-                return parts[0], parts[1]
-            if len(parts) == 1:
-                return None, parts[0]
-            raise ValueError(f"ON identifier {tok!r} is not [table.]column")
-
-        sides = [_side(jm.group("lc")), _side(jm.group("rc"))]
-
-        def _is_right(q, c):
-            if q is not None:
-                if q == rname:
-                    if c not in r_cols:
-                        raise ValueError(
-                            f"ON column {c!r} is not in table {rname!r}"
-                        )
-                    return True
+                q, c = parts
                 if q not in names:
                     raise ValueError(
                         f"ON qualifier {q!r} names no table joined so far"
                     )
-                return False
-            in_r, in_l = c in r_cols, c in cols_sofar
-            if in_r == in_l:
+                i = len(names) - 1 - names[::-1].index(q)
+                if c not in cols[i]:
+                    raise ValueError(f"ON column {c!r} is not in table {q!r}")
+                return i == len(names) - 1, c
+            if len(parts) != 1:
+                raise ValueError(f"ON identifier {tok!r} is not [table.]column")
+            c = parts[0]
+            in_r = c in cols[-1]
+            if in_r == any(c in cs for cs in cols[:-1]):
                 raise ValueError(
-                    f"ON column {c!r} is ambiguous or unknown — qualify it"
+                    f"ON column {c!r} is ambiguous or unknown — qualify it "
+                    f"(<table>.{c})"
                 )
-            return in_r
+            return in_r, c
 
-        rights = [_is_right(q, c) for q, c in sides]
-        if rights == [False, True]:
-            on.append((sides[0][1], sides[1][1]))
-        elif rights == [True, False]:
-            on.append((sides[1][1], sides[0][1]))
-        else:
+        (r0, c0), (r1, c1) = _side(jm.group("lc")), _side(jm.group("rc"))
+        if r0 == r1:
             raise ValueError(
                 "each ON must equate one earlier-table column with one "
                 "column of the newly joined table"
             )
-        tables.append(right)
-        names.append(rname)
-        cols_sofar |= r_cols
-    group_cols, group_exprs, aggs = _parse_mv_shape(m)
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", name)
-    # WITH DELTA REFRESH → inclusion–exclusion signed-delta chain
-    # maintenance (invertible aggregates only — validated in __init__,
-    # failing the CREATE cleanly). The delta chain is inner-only: its
-    # inclusion–exclusion terms have no dangling corrections.
-    extra = {}
-    if m.group("delta"):
-        from rds_to_datalake_project_spark.operators.matview import (
-            DeltaChainMaterializedView,
-        )
+        on.append((c1, c0) if r0 else (c0, c1))
+    return tables, on, hows
 
-        if any(h == "left" for h in hows):
-            raise ValueError(
-                "LEFT joins are not supported with DELTA REFRESH in "
-                "N-table chains — use the recompute chain (drop DELTA) "
-                "or the 2-table delta form (single LEFT JOIN)"
-            )
-        cls = DeltaChainMaterializedView
+
+def _create_matview_statement(spark: SparkSession, m: re.Match, known: dict):
+    """``CREATE MATERIALIZED VIEW v [WITH [AUTO] [DELTA] REFRESH
+    [BUCKETS n]] AS SELECT <group cols + aliased aggregates> FROM
+    <registered table> [[INNER | LEFT [OUTER]] JOIN <registered table>
+    ON <l> = <r>]... GROUP BY <group cols>`` → an incrementally
+    maintained view from operators/matview.py: MaterializedView
+    without a JOIN, JoinMaterializedView for one JOIN and
+    ChainMaterializedView for more (the DELTA classes under WITH DELTA
+    REFRESH), maintained from every joined table's change feed. The
+    store lives under the base table's ``.matviews/`` directory; the
+    view is initially refreshed, registered for REFRESH/DROP and (for
+    simple names) published as a temp view for SELECTs.
+
+    WITH AUTO REFRESH additionally attaches the refresh as a
+    post-commit maintenance hook on every joined table — the view then
+    follows every upsert with no further statements (advisory slot: a
+    failed refresh leaves the view stale, never wrong). WITH DELTA
+    REFRESH selects signed-delta maintenance (refresh I/O ∝ the change
+    window); its classes reject non-invertible aggregates and LEFT
+    hops beyond 2 tables in their constructors, failing the CREATE
+    cleanly.
+    """
+    from rds_to_datalake_project_spark.operators import matview as mvs
+
+    name = _unquote_ident(m.group(1))
+    _validate_mv_name(name)
+    base_name = _unquote_ident(m.group("base"))
+    group_cols, group_exprs, aggs = _parse_mv_shape(m)
+    tables, on, hows = _bind_joins(known, base_name, m.group("joins"))
+    safe = re.sub(r"[^A-Za-z0-9_]", "_", name)
+    path = f"{tables[0].path}/.matviews/{safe}"
+    kw = {
+        "name": safe,
+        "group_exprs": group_exprs,
+        "store_hash_buckets": int(m.group("buckets") or 0),
+    }
+    delta = bool(m.group("delta"))
+    if len(tables) == 1:
+        cls = mvs.DeltaMaterializedView if delta else mvs.MaterializedView
+        mv = cls(tables[0], path, group_cols, aggs, **kw)
+    elif len(tables) == 2:
+        cls = mvs.DeltaJoinMaterializedView if delta else mvs.JoinMaterializedView
+        mv = cls(*tables, path, on[0], group_cols, aggs, how=hows[0], **kw)
     else:
-        cls = ChainMaterializedView
-        extra = {"hows": hows}
-    mv = cls(
-        tables,
-        on=on,
-        path=f"{tables[0].path}/.matviews/{safe}",
-        group_cols=group_cols,
-        aggs=aggs,
-        **extra,
-        name=safe,
-        group_exprs=group_exprs,
-        store_hash_buckets=int(m.group("buckets") or 0),
-    )
+        cls = mvs.DeltaChainMaterializedView if delta else mvs.ChainMaterializedView
+        mv = cls(tables, on, path, group_cols, aggs, hows=hows, **kw)
     return _finish_matview_create(spark, m, name, mv, tables)
 
 
@@ -1297,24 +1158,20 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
             "table_name string, outstanding_dirs int, masked_rows long, "
             "bytes long, fold_floor int, total_dirs int",
         )
-    m = _CREATE_MV_CHAIN_RE.match(sql)
-    if m and table_bound and _unquote_ident(m.group("base")) in known:
-        return _create_chain_matview_statement(spark, m, known)
     m = _CREATE_MV_RE.match(sql)
     if m and table_bound and _unquote_ident(m.group("base")) in known:
         return _create_matview_statement(spark, m, known)
-    # A multi-join CREATE MATERIALIZED VIEW that matched NEITHER shape
-    # (e.g. a LEFT JOIN inside a ≥2-join chain) must fail loudly here:
-    # falling through to plain spark.sql would surface a confusing
-    # unresolved-table/parse error instead of naming the limitation
-    # (r11 ADVICE / VERDICT task #7).
+    # A joined CREATE MATERIALIZED VIEW the strict shape rejected (e.g.
+    # a RIGHT or FULL JOIN) must fail loudly here: falling through to
+    # plain spark.sql would surface a confusing unresolved-table/parse
+    # error instead of naming the limitation.
     if _CREATE_MV_LOOSE_RE.match(sql) and table_bound:
         raise ValueError(
-            "unsupported CREATE MATERIALIZED VIEW shape: N-table (>= 2 "
-            "JOIN) chains support INNER and LEFT [OUTER] joins only — "
-            "RIGHT/FULL chains are not maintainable by "
-            "ChainMaterializedView (spell a RIGHT join as LEFT from "
-            "the other side)."
+            "unsupported CREATE MATERIALIZED VIEW shape: joined views "
+            "take registered lake tables under INNER and LEFT [OUTER] "
+            "equi-joins (ON <l> = <r>) only — RIGHT/FULL joins are not "
+            "maintainable (spell a RIGHT join as LEFT from the other "
+            "side)."
         )
     # REFRESH/DROP MATERIALIZED VIEW is engine-only syntax (no native
     # Spark spelling — its REFRESH takes resource paths), so these
@@ -1333,12 +1190,7 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
 
         rows = []
         for name, mv in MATVIEWS.items():
-            if hasattr(mv, "tables"):
-                tables = ",".join(t.spec.name for t in mv.tables)
-            elif hasattr(mv, "left"):
-                tables = f"{mv.left.spec.name},{mv.right.spec.name}"
-            else:
-                tables = mv.base.spec.name
+            tables = ",".join(t.spec.name for t in _mv_tables(mv))
             is_delta = isinstance(mv, _SignedDeltaMergeMixin)
             try:
                 lag = _rw._lag(mv)
@@ -1376,15 +1228,12 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
                 f"DESCRIBE MATERIALIZED VIEW on unknown view {name!r}; "
                 f"known: {sorted(MATVIEWS)}"
             )
-        if hasattr(mv, "tables"):
-            tables = ",".join(t.spec.name for t in mv.tables)
-            cursor = mv.refreshed_versions()
-        elif hasattr(mv, "left"):
-            tables = f"{mv.left.spec.name},{mv.right.spec.name}"
-            cursor = mv.refreshed_versions()
-        else:
-            tables = mv.base.spec.name
-            cursor = mv.refreshed_version()
+        tables = ",".join(t.spec.name for t in _mv_tables(mv))
+        cursor = (
+            mv.refreshed_versions()
+            if hasattr(mv, "tables")
+            else mv.refreshed_version()
+        )
         is_delta = isinstance(mv, _SignedDeltaMergeMixin)
         aux = ",".join(sorted(getattr(mv, "_aux", {}) or {})) or None
         return _literal_frame(spark, 
@@ -1417,18 +1266,10 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
             # REFRESH ... FULL: operator-forced rebuild from the
             # current snapshot(s) — the ops verb for "I don't trust
             # the view" (e.g. after an out-of-band store repair).
-            heads = getattr(mv, "tables", None)
-            if heads is not None:  # chain view: tuple-of-heads _full
-                info = mv._full(
-                    tuple((t.versions() or [0])[-1] for t in mv.tables)
-                )
-            elif hasattr(mv, "left"):  # join view
-                info = mv._full(
-                    (mv.left.versions() or [0])[-1],
-                    (mv.right.versions() or [0])[-1],
-                )
-            else:
-                info = mv._full((mv.base.versions() or [0])[-1])
+            heads = tuple((t.versions() or [0])[-1] for t in _mv_tables(mv))
+            # join views take the tuple of heads, single-table views
+            # the one head
+            info = mv._full(heads if hasattr(mv, "tables") else heads[0])
         else:
             info = mv.refresh()
         _publish_matview(spark, name, mv)

@@ -4,9 +4,7 @@ the hop's table NULLed, so dim-side group columns carry a real NULL
 group; affected-fact discovery and old∪new touched-group discovery
 must see NULL-group transitions (match births adopting dangling facts,
 match deaths re-dangling them, far-dim deletes NULLing only their own
-columns); LEFT-tainted tables never zone/fk-prune their recompute
-scans (pruning would flip facts into the NULL group, not exclude
-them)."""
+columns)."""
 
 from __future__ import annotations
 
@@ -180,14 +178,6 @@ def test_mixed_hops_left_then_inner(spark, tmp_path):
     fact.upsert(_fb(spark, [(1, 1, 1, 10, 1)], op="D"), delete_mode="apply")
     assert view.refresh()["mode"] == "incremental"
     assert _got(view) == _direct(fact, d1, d2, hows)
-
-
-def test_left_tainted_tables_never_prune(spark, tmp_path):
-    fact, d1, d2, view = _mk(spark, tmp_path, HOWS)
-    assert view._left_tainted == [False, True, True]
-    hows = ["inner", "left"]
-    _, _, _, v2 = _mk(spark, tmp_path / "b", hows)
-    assert v2._left_tainted == [False, False, True]
 
 
 def test_hows_validation(spark, tmp_path):

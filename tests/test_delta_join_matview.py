@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark.operators.matview import (
+    DeltaChainMaterializedView,
     DeltaJoinMaterializedView,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
@@ -208,6 +209,23 @@ def test_crash_mid_apply_rebuilds_not_double_counts(spark, tmp_path):
     assert _got(view) == _direct(fact, dim)
 
 
+def test_two_table_store_reopens_as_delta_chain(spark, tmp_path):
+    """A store refreshed through DeltaJoinMaterializedView reopens as
+    the 2-table DeltaChainMaterializedView on the same path: same
+    cursor file, store name and hidden columns, so the first refresh
+    is a noop and the next one a delta merge, never a full rebuild."""
+    fact, dim, view = _mk(spark, tmp_path)
+    assert view.refresh()["mode"] == "full"
+    chain = DeltaChainMaterializedView(
+        [fact, dim], [("fk", "d_id")], view.path,
+        group_cols=["gname"], aggs=AGGS, name="delta_join_matview",
+    )
+    assert chain.refresh()["mode"] == "noop"
+    fact.upsert(_fb(spark, [(400, 2, 5, 1, 1)]))
+    assert chain.refresh()["mode"] == "delta"
+    assert _got(chain) == _direct(fact, dim)
+
+
 def test_bulk_rewrite_falls_back_to_full(spark, tmp_path):
     fact, dim, view = _mk(spark, tmp_path)
     view.max_broadcast_keys = 2
@@ -367,7 +385,8 @@ def test_sql_facade_routes_delta_join(spark, tmp_path):
             tables=reg,
         )
         mv = MATVIEWS["djleft"]
-        assert isinstance(mv, DeltaJoinMaterializedView) and mv.how == "left"
+        assert isinstance(mv, DeltaJoinMaterializedView)
+        assert mv.hows == ["left"]
         fact.upsert(_fb(spark, [(600, 99, 5, 1, 1)]))  # dangling insert
         got = {
             (r["gname"], r["n"])

@@ -117,7 +117,6 @@ def test_dangling_inserts_and_deletes_stay_delta(spark, tmp_path):
     assert _got(view) == _direct(fact, dim)
 
 
-@pytest.mark.slow
 def test_match_birth_adopts_dangling_facts(spark, tmp_path):
     """A dim row appearing at a previously matchless key (0 → pos
     flip) must move that key's facts out of the NULL group — though

@@ -10,8 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark.operators.matview import (
+    ChainMaterializedView,
     JoinMaterializedView,
-    attach_join_matview_maintenance,
+    attach_chain_matview_maintenance,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 from rds_to_datalake_project_spark.schema import TableSpec
@@ -127,11 +128,28 @@ def test_vanished_group_is_tombstoned(spark, tmp_path):
 @pytest.mark.slow
 def test_maintenance_hooks_follow_both_tables(spark, tmp_path):
     facts, dims, view = _mk(spark, tmp_path)
-    attach_join_matview_maintenance(view)
+    attach_chain_matview_maintenance(view)
     facts.upsert(_fbatch(spark, [(200, 1, 5, 1)]))
     assert _view_rows(view) == _direct(facts, dims)
     dims.upsert(_dbatch(spark, [(0, "g7", 1)]))
     assert _view_rows(view) == _direct(facts, dims)
+
+
+def test_two_table_store_reopens_as_chain(spark, tmp_path):
+    """A store refreshed through JoinMaterializedView reopens as the
+    2-table ChainMaterializedView on the same path: same cursor file
+    and store name, so the first refresh is a noop (never a full
+    rebuild) and later ones stay incremental."""
+    facts, dims, view = _mk(spark, tmp_path)
+    assert view.refresh()["mode"] == "full"
+    chain = ChainMaterializedView(
+        [facts, dims], [("f_dim", "d_id")], view.path,
+        group_cols=view.group_cols, aggs=view.aggs, name="join_matview",
+    )
+    assert chain.refresh()["mode"] == "noop"
+    facts.upsert(_fbatch(spark, [(300, 2, 7, 1)]))
+    assert chain.refresh()["mode"] == "incremental"
+    assert _view_rows(chain) == _direct(facts, dims)
 
 
 def test_requires_versioned_tables(spark, tmp_path):
@@ -359,14 +377,30 @@ def test_failed_create_attaches_no_hooks_and_sql_spellings_parse(spark, tmp_path
         tables=reg,
     ).collect()[0]
     assert out["mode"] == "full"
-    with pytest.raises(ValueError, match="not in table"):
-        run_query(
-            spark,
-            "CREATE MATERIALIZED VIEW bad2 AS SELECT grp, count(*) AS n "
-            "FROM facts_t JOIN dims_t ON facts_t.d_id = dims_t.d_id "
-            "GROUP BY grp",
-            tables=reg,
-        )
+    # a qualifier naming the wrong table fails the same way at every
+    # table count: `grp` lives in dims_t, not facts_t
+    regs = KeyedTable(
+        spark, str(tmp_path / "r"),
+        TableSpec("regs", record_key=("r_grp",), precombine_key="r_seq",
+                  partition_granularity=None),
+        retain_versions=8,
+    )
+    regs.initial_load(
+        spark.createDataFrame([("g0", 0)], "r_grp string, r_seq long")
+    )
+    reg["regs_t"] = regs
+    for bad in (
+        "FROM facts_t JOIN dims_t ON facts_t.d_id = dims_t.d_id",
+        "FROM facts_t JOIN dims_t ON facts_t.f_dim = dims_t.d_id "
+        "JOIN regs_t ON facts_t.grp = regs_t.r_grp",
+    ):
+        with pytest.raises(ValueError, match="not in table"):
+            run_query(
+                spark,
+                "CREATE MATERIALIZED VIEW bad2 AS SELECT grp, count(*) AS n "
+                f"{bad} GROUP BY grp",
+                tables=reg,
+            )
     run_query(spark, "DROP MATERIALIZED VIEW ok", tables=reg)
 
 

@@ -119,6 +119,39 @@ def test_pruned_refresh_survives_null_groups(spark, tmp_path):
     assert {tuple(r) for r in mv.read().collect()} == _recompute(t)
 
 
+def test_all_null_zones_never_prune_the_null_group(spark, tmp_path):
+    """A touched NULL group disables pruning on its column even when
+    every zone-mapped file holds only NULLs there: pruning those files
+    would recompute the NULL group from no rows and tombstone it."""
+    t = KeyedTable(
+        spark,
+        str(tmp_path / "t"),
+        TableSpec(
+            "nullg", record_key=("k",), precombine_key="seq",
+            partition_granularity=None,
+        ),
+        retain_versions=4,
+        zonemap_columns=["g"],
+    )
+    t.initial_load(
+        spark.createDataFrame(
+            [(i, None, 1.0 * i, 0) for i in range(6)],
+            "k long, g string, amount double, seq long",
+        )
+    )
+    mv = MaterializedView(
+        t, str(tmp_path / "mv"), ["g"], {"rev": "sum(amount)"}
+    )
+    assert mv.refresh()["mode"] == "full"
+    t.upsert(
+        spark.createDataFrame(
+            [(1, None, 100.0, 1)], "k long, g string, amount double, seq long"
+        ).withColumn("Op", F.lit("U"))
+    )
+    assert mv.refresh()["mode"] == "incremental"
+    assert [tuple(r) for r in mv.read().collect()] == [(None, 114.0)]
+
+
 @pytest.mark.slow
 def test_join_view_pruned_recompute(spark, tmp_path):
     """JoinMaterializedView's recompute scan prunes the side that owns
@@ -166,6 +199,69 @@ def test_join_view_pruned_recompute(spark, tmp_path):
         .collect()
     }
     assert {tuple(x) for x in mv.read().collect()} == expect
+
+
+@pytest.mark.slow
+def test_left_join_view_prunes_nullable_side_exactly(spark, tmp_path):
+    """Under a LEFT join the nullable (right) side still zone-prunes by
+    its own group column: a fact whose match is pruned away turns into
+    a NULL extension, which the touched-group semi-join drops, because
+    a touched NULL group disables that column's pruning. Exact across a
+    group move (pruned) and a match death into the NULL group."""
+    dim = _dates_table(spark, str(tmp_path / "dim"))
+    fact = KeyedTable(
+        spark,
+        str(tmp_path / "f"),
+        TableSpec(
+            "lfact", record_key=("f_id",), precombine_key="f_seq",
+            partition_granularity=None,
+        ),
+        retain_versions=4,
+    )
+    # fks 0..239 match a dim row; 500+ dangle
+    fact.initial_load(
+        spark.createDataFrame(
+            [(i, i if i % 7 else 500 + i, 1.0 * i, 0) for i in range(240)],
+            "f_id long, fk long, f_amt double, f_seq long",
+        )
+    )
+    mv = JoinMaterializedView(
+        fact, dim, str(tmp_path / "mv"), on=("fk", "k"),
+        group_cols=["d"], aggs={"rev": "sum(f_amt)", "n": "count(*)"},
+        how="left",
+    )
+
+    def expect():
+        f, d = fact.read(), dim.read()
+        return {
+            tuple(x)
+            for x in f.join(d, f["fk"] == d["k"], "left")
+            .groupBy("d")
+            .agg(F.sum("f_amt").alias("rev"), F.count("*").cast("long").alias("n"))
+            .collect()
+        }
+
+    assert mv.refresh()["mode"] == "full"
+    # group move: k=8 leaves 2024-09-15 for 2024-08-15
+    dim.upsert(
+        spark.createDataFrame(
+            [(8, "2024-08-15", 90.0, 1)], "k long, d string, amount double, seq long"
+        ).withColumn("Op", F.lit("U"))
+    )
+    zonemap.reset_prune_stats()
+    assert mv.refresh()["mode"] == "incremental"
+    assert dict(zonemap.LAST_PRUNE).get("files_skipped", 0) > 0
+    assert {tuple(x) for x in mv.read().collect()} == expect()
+    # match death: k=9's facts dangle into the (touched) NULL group
+    dim.upsert(
+        spark.createDataFrame(
+            [(9, "2024-10-15", 100.0, 2)], "k long, d string, amount double, seq long"
+        ).withColumn("Op", F.lit("D")),
+        delete_mode="apply",
+    )
+    assert mv.refresh()["mode"] == "incremental"
+    got = {tuple(x) for x in mv.read().collect()}
+    assert got == expect() and any(r[0] is None for r in got)
 
 
 # --- chain view: dim pruning + composite keys ---------------------------------

@@ -673,7 +673,9 @@ def test_delta_join_pruned_current_broadcasts_changed_keys(spark, tmp_path):
         group_cols=["gname"], aggs={"n": "count(*)"},
     )
     keys = spark.createDataFrame([(7,), (9,)], "fk long")
-    sel = view._pruned_current(view.left, view.l_on, keys)
+    sel = view._pruned_current(
+        view.tables[0], view.on[0][0], keys, view.tables[0].read()
+    )
     plan = sel._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
     assert "SortMergeJoin" not in plan
@@ -833,9 +835,11 @@ def test_left_delta_dangling_terms_broadcast(spark, tmp_path):
         (fact.versions() or [0])[-1],
         (dim.versions() or [0])[-1],
     )
-    dl = view._signed_changes(fact, cur[0], new[0]).localCheckpoint(eager=True)
-    dr = view._signed_changes(dim, cur[1], new[1]).localCheckpoint(eager=True)
-    terms = view._dangling_terms(dl, dr)
+    deltas = [
+        view._signed_changes(i, cur, new).localCheckpoint(eager=True)
+        for i in (0, 1)
+    ]
+    terms = view._dangling_terms(deltas, [t.read() for t in view.tables])
     assert terms
     saw_broadcast = False
     for term in terms:

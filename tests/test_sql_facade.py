@@ -808,9 +808,9 @@ def test_sql_facade_matview_rejects_bad_shapes(spark, tmp_path):
 
 
 def test_sql_facade_chain_right_join_raises_targeted_error(spark, tmp_path):
-    """LEFT chains are supported since round 12 (ChainMaterializedView
-    hows — tests/test_chain_left_matview.py); a RIGHT/FULL join inside
-    a >=2-join CREATE MATERIALIZED VIEW still matches neither strict
+    """LEFT joins are supported (ChainMaterializedView hows —
+    tests/test_chain_left_matview.py); a RIGHT/FULL join in a CREATE
+    MATERIALIZED VIEW, at any table count, does not match the strict
     facade shape and must raise the targeted loose-shape error, never
     fall through to plain spark.sql's confusing unresolved-table
     failure (r11 ADVICE / VERDICT #7)."""
@@ -830,15 +830,20 @@ def test_sql_facade_chain_right_join_raises_targeted_error(spark, tmp_path):
         t.initial_load(spark.createDataFrame(rows, cols))
         reg[name] = t
     try:
-        with pytest.raises(ValueError, match="RIGHT/FULL"):
-            run_query(
-                spark,
-                "CREATE MATERIALIZED VIEW bad AS "
-                "SELECT rname, sum(amount) AS rev FROM cf "
-                "RIGHT JOIN cd ON fk = dk JOIN cr ON rk = rrk "
-                "GROUP BY rname",
-                tables=reg,
-            )
+        for body in (
+            "SELECT rname, sum(amount) AS rev FROM cf "
+            "RIGHT JOIN cd ON fk = dk JOIN cr ON rk = rrk GROUP BY rname",
+            # a single RIGHT/FULL JOIN gets the same targeted error
+            "SELECT rk, sum(amount) AS rev FROM cf "
+            "RIGHT JOIN cd ON fk = dk GROUP BY rk",
+            "SELECT rk, sum(amount) AS rev FROM cf "
+            "FULL OUTER JOIN cd ON fk = dk GROUP BY rk",
+        ):
+            with pytest.raises(ValueError, match="RIGHT/FULL"):
+                run_query(
+                    spark, f"CREATE MATERIALIZED VIEW bad AS {body}",
+                    tables=reg,
+                )
         assert "bad" not in MATVIEWS
     finally:
         MATVIEWS.clear()
