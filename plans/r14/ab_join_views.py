@@ -1,11 +1,13 @@
 #!/usr/bin/env python
-"""Time the seven join-view bench rows in one checkout.
+"""Time view bench rows (default: the seven join-view rows) in one
+checkout.
 
     python ab_join_views.py <checkout> <sf_dir> <out.json> [row,row,...]
 
 Starts a fresh local[$SPARK_GRAFT_CPUS] session from <checkout>'s
 package, warms it the way bench.py does, then runs each row's
-registry PHASES build + serve (bench.py's timed regions) once. Per
+registry PHASES build + serve (bench.py's timed regions) once; a row
+without PHASES runs as one query, timed as its build. Per
 row it records build_s, serve_s, the Spark jobs the row submitted,
 and the jobs of every view refresh inside it (each class's
 ``refresh`` is wrapped; jobs are counted from the DAG scheduler's job
@@ -89,7 +91,9 @@ def main() -> int:
     }
     for name in rows:
         spark.catalog.clearCache()
-        build, serve = PHASES[name]
+        build, serve = PHASES.get(
+            name, (QUERIES[name], lambda spark, sf_dir, df: df)
+        )
         del refreshes[:]
         j0 = jobs_submitted()
         t0 = time.perf_counter()

@@ -4,9 +4,13 @@
 maintains the one aggregate shape the reference's consumers ask of
 Athena (time-bucketed rollups); this is the general form — an
 arbitrary GROUP BY over arbitrary SQL aggregate expressions, kept
-fresh against a :class:`KeyedTable`'s commit log.
+fresh against the commit logs of one :class:`KeyedTable` or of an
+equi-joined tree of them. Two maintainers cover every shape —
+:class:`ChainMaterializedView` (recompute) and
+:class:`DeltaChainMaterializedView` (signed delta); the single-table
+and 2-table view classes are their n = 1 and n = 2 forms.
 
-Maintenance strategy: AFFECTED-GROUP RECOMPUTE. Each refresh reads
+Default strategy: AFFECTED-GROUP RECOMPUTE. Each refresh reads
 the base's row-level changes since the last refreshed version
 (``KeyedTable.table_changes`` with split pre/post images, so an
 update that MOVES a row between groups refreshes both the group it
@@ -110,18 +114,6 @@ def _pmap(fn, items, workers: int = 3):
         return list(pool.map(fn, items))
 
 
-def _nullsafe_cond(a: DataFrame, b: DataFrame, cols: list[str]):
-    """eqNullSafe conjunction over the group columns: a NULL group is
-    a REAL group (SQL GROUP BY keeps it) — a name-list join would
-    never match it, so the incremental path would silently tombstone
-    it out of the view while full recomputation keeps it."""
-    cond = None
-    for c in cols:
-        e = a[c].eqNullSafe(b[c])
-        cond = e if cond is None else cond & e
-    return cond
-
-
 def _semi_on_groups(
     rows: DataFrame, touched: DataFrame, cols: list[str]
 ) -> DataFrame:
@@ -157,8 +149,8 @@ def _semi_on_keys(
 
 
 def _merge_touched(store, touched, fresh, group_cols, aggs, seq) -> None:
-    """Shared merge step of affected-group recompute (single-table and
-    join views): upsert the recomputed groups, tombstone touched
+    """Merge step of affected-group recompute: upsert the recomputed
+    groups, tombstone touched
     groups with no surviving rows — null-safe group matching
     throughout."""
     fg = fresh.select(
@@ -424,43 +416,123 @@ def _zone_pruned_rows(
         return None  # any metadata/type surprise → full-scan fallback
 
 
-class MaterializedView:
-    """``SELECT group_cols, aggs FROM base GROUP BY group_cols``,
-    incrementally maintained.
+# --- N-table chain/star join views --------------------------------------------
+
+
+class ChainMaterializedView:
+    """``SELECT group_cols, aggs FROM T0 [JOIN T1 ON ...]... GROUP BY
+    group_cols`` over one table or an N-table equi-join TREE — chain
+    (``T0 JOIN T1 ON T0.fk0 = T1.k1 JOIN T2 ON T1.fk1 = T2.k2``),
+    star (every fk on the fact), or snowflake (each join's left column
+    may belong to ANY earlier table) — incrementally maintained from
+    EVERY table's change feed. :class:`MaterializedView` is its n = 1
+    form and :class:`JoinMaterializedView` its n = 2 form, each under
+    its own signature.
 
     ``aggs`` maps output column name -> SQL aggregate expression over
-    the base table's columns (``{"revenue": "sum(amount)", "n":
-    "count(*)"}``). The base table must retain versions
-    (``retain_versions > 0``) — the refresh cursor is a base commit
-    version and the delta comes from ``table_changes``.
-
-    ``group_exprs`` makes group keys DERIVED: a mapping from a
-    ``group_cols`` name to a SQL scalar expression over base columns
+    the joined columns (``{"revenue": "sum(amount)", "n":
+    "count(*)"}``). ``group_exprs`` makes group keys DERIVED: a mapping
+    from a ``group_cols`` name to a SQL scalar expression
     (``{"h": "date_trunc('hour', ts)"}``) — the time-bucketed rollup
     shape the reference serves through Athena
     (rds_to_datalake/athena.py:16-64). Derived keys are computed on
-    the change window AND the snapshot before grouping, so the
-    affected-group recompute contract is unchanged: touched buckets
-    ∝ the change set, never the corpus.
+    every frame group columns are read from (``_derive``), so touched
+    buckets stay ∝ the change set, never the corpus.
+
+    Maintenance is AFFECTED-GROUP RECOMPUTE:
+
+    1. Each changed table reduces its window to a DISTINCT key set
+       (∝ its change set): a dimension Ti to the values its join
+       column carried in either image; the fact to its record keys —
+       or, when every group key is computable from the fact's own
+       columns (always at n = 1), straight to the group projection of
+       its window's pre- and post-images. That projection IS the
+       fact's touched-group set: every joined row of a fact row
+       carries the row's group, and an update that MOVES a row
+       between groups touches both.
+    2. Dimension keys (and non-local fact keys) propagate DOWN the
+       chain to the fact: changed T2 join values select the T1 rows
+       that reference them (semi-join), whose join values select the
+       referencing fact rows — each hop is one semi-join whose leaf
+       key set is broadcast and whose intermediate results stay
+       distributed (AQE picks the strategy; an intermediate
+       neighborhood is NOT driver-bounded).
+    3. Their touched groups = group values of the joined AFFECTED fact
+       rows in the NEW state ∪ the OLD state (as-of snapshots at the
+       previous cursor — catches groups that only lost rows, e.g. a
+       dim delete dropping its fact rows from the inner join). A
+       refresh whose only change is a fact-local window reads no
+       as-of snapshot.
+    4. Exactly those groups recompute from the current (zone-pruned)
+       join and merge into the view store (vanished groups tombstone,
+       null-safe group matching — a NULL group is a real group).
+
+    Cost ∝ the changed keys' join neighborhoods, never any corpus.
+    Recompute (not retraction) keeps arbitrary SQL aggregates correct —
+    MIN/MAX/COUNT(DISTINCT)/percentiles need no invertibility.
+    Idempotent replay: the cursor marker is written after the merge,
+    so a crash between the two only repeats work. Every table must be
+    versioned; the cursor is one commit version per table.
+
+    ``hows`` (one per hop, default all ``"inner"``) admits ``"left"``
+    hops: unmatched owner rows survive with the hop's table NULLed —
+    dim-side group columns then carry a real NULL group, and a dim
+    appearing/vanishing moves facts between that group and its own.
+    Affected-fact discovery is unchanged (a dim change affects exactly
+    the facts whose join key equals the changed keys, matched or not),
+    and the LEFT ``_joined`` makes old∪new touched-group discovery see
+    NULL-group transitions. The one semantics-sensitive piece is SCAN
+    PRUNING: dropping a row from any table on a LEFT-reachable path
+    flips downstream rows into the NULL extension instead of removing
+    them. Zone pruning a table by its OWN group
+    columns stays exact: a flipped row carries NULL in every one of
+    them, and a NULL touched value disables that column's pruning, so
+    a flipped row can never land in a refreshed group. FK-propagated
+    fact pruning has no such argument (it would drop dangling facts
+    from a touched NULL group) and is off whenever any hop is LEFT.
+    NOTE: a LEFT hop followed
+    by an INNER hop THROUGH the nullable side re-drops the dangling
+    rows (SQL semantics — spell both hops LEFT for a nullable chain).
+
+    ``tables``: [fact, dim1, dim2, ...] (KeyedTables, retain_versions
+    > 0). ``on``: [(fk_of_T0, key_of_T1), (fk_of_T1, key_of_T2), ...]
+    — column names must be unambiguous across the joined frame
+    (TPC-H-style prefixed schemas satisfy this).
     """
 
     def __init__(
         self,
-        base: KeyedTable,
+        tables: list[KeyedTable],
+        on: list[tuple[str, str]],
         path: str,
         group_cols: list[str],
         aggs: dict[str, str],
-        name: str = "matview",
+        name: str = "chain_matview",
         max_broadcast_keys: int = 1_000_000,
         group_exprs: dict[str, str] | None = None,
         store_retain_versions: int = 0,
         store_hash_buckets: int = 0,
+        hows: list[str] | None = None,
     ):
-        if not base.retain_versions:
+        if not tables or len(on) != len(tables) - 1:
             raise ValueError(
-                "MaterializedView requires a versioned base table "
-                "(retain_versions > 0) — the refresh cursor is a commit version"
+                "need >= 1 table and exactly len(tables)-1 ON pairs"
             )
+        self.hows = list(hows) if hows is not None else ["inner"] * len(on)
+        if len(self.hows) != len(on) or any(
+            h not in ("inner", "left") for h in self.hows
+        ):
+            raise ValueError(
+                "hows must give 'inner' or 'left' per ON pair, got "
+                f"{self.hows!r}"
+            )
+        for t in tables:
+            if not t.retain_versions:
+                raise ValueError(
+                    f"{type(self).__name__} requires every table versioned "
+                    "(retain_versions > 0) — the refresh cursor is a "
+                    "commit version per table"
+                )
         if not group_cols or not aggs:
             raise ValueError("group_cols and aggs must be non-empty")
         bad = set(group_cols) & set(aggs)
@@ -472,8 +544,30 @@ class MaterializedView:
             raise ValueError(
                 f"group_exprs name(s) not in group_cols: {sorted(stray)}"
             )
-        self.base = base
-        self.spark: SparkSession = base.spark
+        self.tables = list(tables)
+        self.on = list(on)
+        # Attachment structure: join j binds tables[j+1] via
+        # on[j] = (left_col, right_col) where right_col belongs to
+        # tables[j+1] and left_col to exactly ONE earlier table — a
+        # linear chain owns it at j, a star at 0, a snowflake anywhere
+        # between. The owner indices drive key propagation toward the
+        # fact in _affected_facts. A single table has no hop and is
+        # never read here (its base may still be unloaded).
+        cols_of = [set(t.read().columns) for t in tables] if self.on else []
+        self._owner: list[int] = []
+        for j, (lcol, rcol) in enumerate(self.on):
+            if rcol not in cols_of[j + 1]:
+                raise ValueError(
+                    f"ON right column {rcol!r} is not in table {j + 1}"
+                )
+            owners = [i for i in range(j + 1) if lcol in cols_of[i]]
+            if len(owners) != 1:
+                raise ValueError(
+                    f"ON left column {lcol!r} must belong to exactly one "
+                    f"earlier table (found in {owners})"
+                )
+            self._owner.append(owners[0])
+        self.spark: SparkSession = tables[0].spark
         self.path = path
         self.group_cols = list(group_cols)
         self.aggs = dict(aggs)
@@ -500,44 +594,75 @@ class MaterializedView:
             ),
             retain_versions=store_retain_versions,
         )
+        self._fact_local = self._groups_on_fact()
 
-    # -- refresh cursor ------------------------------------------------------
+    # -- cursor ----------------------------------------------------------------
 
     def _marker_path(self) -> str:
-        return f"{self.path}/.mv/_BASE_VERSION"
+        # one table keeps the single-version file name: its "<v> <token>"
+        # content is the same cursor format
+        suffix = "S" if self.on else ""
+        return f"{self.path}/.mv/_BASE_VERSION{suffix}"
 
-    def refreshed_version(self) -> int | None:
-        """Base commit version the view currently reflects (None =
-        never refreshed, marker unreadable, or the base was RESET —
-        its incarnation token no longer matches → next refresh is
-        full)."""
+    def refreshed_versions(self) -> tuple[int, ...] | None:
+        """Per-table commit versions the view reflects (None = never
+        refreshed, marker unreadable, or some table was RESET — its
+        incarnation token no longer matches → next refresh is full)."""
         parts = (_read_small(self.spark, self._marker_path()) or "").split()
-        try:
-            v = int(parts[0])
-        except (IndexError, ValueError):
+        n = len(self.tables)
+        if len(parts) != 2 * n:
             return None
-        if len(parts) > 1 and parts[1] != _inc_token(self.base):
-            return None  # cursor predates a table reset
-        return v
+        try:
+            versions = tuple(int(p) for p in parts[:n])
+        except ValueError:
+            return None
+        if any(
+            parts[n + i] != _inc_token(t) for i, t in enumerate(self.tables)
+        ):
+            return None  # some table was RESET since the cursor
+        return versions
 
-    # -- plans ---------------------------------------------------------------
+    def _write_cursor(self, versions: tuple[int, ...]) -> None:
+        _write_small(
+            self.spark,
+            self._marker_path(),
+            " ".join(str(v) for v in versions)
+            + " "
+            + " ".join(_inc_token(t) for t in self.tables),
+        )
+
+    # -- plans -----------------------------------------------------------------
 
     def _derive(self, rows: DataFrame) -> DataFrame:
         """Attach the derived group-key columns (no-op without
-        group_exprs). Applied to every frame the group columns are
-        read from: the aggregation input, the change window, and the
-        snapshot side of the touched-group semi-join."""
+        group_exprs)."""
         for c, e in self.group_exprs.items():
             rows = rows.withColumn(c, F.expr(e))
         return rows
 
+    def _joined(self, frames: list[DataFrame]) -> DataFrame:
+        out = frames[0]
+        for (fk, k), d, how in zip(self.on, frames[1:], self.hows):
+            out = out.join(d, out[fk] == d[k], how)
+        return self._derive(out)
+
+    def _groups_on_fact(self) -> bool:
+        """Whether every group key is computable from the fact's own
+        columns (always true for a single table)."""
+        if not self.on:
+            return True
+        try:
+            cols = self._derive(self.tables[0].read().limit(0)).columns
+        except Exception:  # a derived key reads a dimension column
+            return False
+        return set(self.group_cols) <= set(cols)
+
     def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        """``rows`` must already be derived (_derive applied exactly
-        once by the caller) — deriving here too would double-apply a
-        self-shadowing group expression (``v + 1 AS v``): incremental
+        """``rows`` must already be derived (``_derive`` applied exactly
+        once, as ``_joined`` does) — deriving twice would double-apply
+        a self-shadowing group expression (``v + 1 AS v``): incremental
         refresh would group by v+2 while full refresh groups by v+1,
-        tombstoning real groups. The join views keep the same
-        discipline (they derive only in _joined)."""
+        tombstoning real groups."""
         out = rows.groupBy(*self.group_cols).agg(
             *[F.expr(e).alias(c) for c, e in self.aggs.items()]
         )
@@ -546,92 +671,387 @@ class MaterializedView:
     def read(self) -> DataFrame:
         return _read_store(self.store).drop(_SEQ_COL)
 
-    # -- maintenance ---------------------------------------------------------
-
     def refresh(self) -> dict:
-        """Bring the view up to the base's latest commit. Returns a
-        summary dict: {"mode", "base_version", "groups_refreshed"}."""
+        """Bring the view up to every table's latest commit. Returns a
+        summary dict: {"mode", "versions", "base_version" (their sum —
+        the one version at n = 1), "groups_refreshed"}."""
         return _record_refresh(self, self._refresh())
 
     def _refresh(self) -> dict:
-        latest = (self.base.versions() or [0])[-1]
-        since = self.refreshed_version()
-        if since is not None and since == latest:
-            return {"mode": "noop", "base_version": latest, "groups_refreshed": 0}
-        if since is None or since not in self.base.readable_versions():
-            return self._full(latest)
-        return self._incremental(since, latest)
+        heads = tuple((t.versions() or [0])[-1] for t in self.tables)
+        cur = self.refreshed_versions()
+        if cur == heads:
+            return {
+                "mode": "noop",
+                "versions": cur,
+                "base_version": sum(cur),
+                "groups_refreshed": 0,
+            }
+        if cur is None or any(
+            cur[i] not in t.readable_versions()
+            for i, t in enumerate(self.tables)
+        ):
+            return self._full(heads)
+        return self._incremental(cur, heads)
 
-    def _write_marker(self, latest: int) -> None:
-        _write_small(
-            self.spark,
-            self._marker_path(),
-            f"{latest} {_inc_token(self.base)}",
-        )
-
-    def _full(self, latest: int) -> dict:
-        full = self._aggregate(self._derive(self.base.read()), latest)
-        self.store.initial_load(full)
+    def _full(self, heads: tuple[int, ...]) -> dict:
+        rows = self._joined([t.read() for t in self.tables])
+        self.store.initial_load(self._aggregate(rows, sum(heads)))
         n = self.store.read().count()
-        self._write_marker(latest)
-        return {"mode": "full", "base_version": latest, "groups_refreshed": n}
+        self._write_cursor(heads)
+        return {
+            "mode": "full",
+            "versions": heads,
+            "base_version": sum(heads),
+            "groups_refreshed": n,
+        }
 
-    def _incremental(self, since: int, latest: int) -> dict:
-        changes = self._derive(
-            self.base.table_changes(since, latest, include_preimage=True)
+    def _changed_keys(self, i: int, cur, new) -> DataFrame | None:
+        """Distinct key set of table i's change window, or None when
+        that table did not move.
+
+        A fact (i = 0) whose group keys are all its own columns yields
+        its TOUCHED GROUPS directly: the distinct group projection of
+        its window's pre- and post-images (class docstring, step 1).
+        Any other fact yields its FULL record-key tuples (aliased
+        ``__ck_<j>``): keying on the leading component alone would
+        collapse distinct composite-key rows sharing it, silently
+        omitting their groups from the touched set (r11 ADVICE,
+        medium). A dimension yields the non-NULL values of the column
+        its hop joins on, over pre AND post images (aliased ``__pv``):
+        exactly the values the changed rows carried in the old or the
+        new state, so the walk toward the fact needs no scan of the
+        dimension itself. A row absent from one state (an insert
+        walked in the old state, a delete in the new) still names the
+        facts whose NULL-group membership flipped under a LEFT hop;
+        NULL join values match nothing."""
+        if new[i] <= cur[i]:
+            return None
+        t = self.tables[i]
+        if i == 0 and self._fact_local:
+            return (
+                self._derive(
+                    t.table_changes(cur[i], new[i], include_preimage=True)
+                )
+                .select(*self.group_cols)
+                .distinct()
+            )
+        if i == 0:
+            kcs = list(t.spec.record_key)
+            return (
+                t.table_changes(cur[i], new[i])
+                .select(*[F.col(c).alias(f"__ck_{j}") for j, c in enumerate(kcs)])
+                .distinct()
+            )
+        return (
+            t.table_changes(cur[i], new[i], include_preimage=True)
+            .select(F.col(self.on[i - 1][1]).alias("__pv"))
+            .filter(F.col("__pv").isNotNull())
+            .distinct()
         )
-        # Distinct group keys touched by any image — pre AND post, so
-        # group-moving updates refresh both sides. Broadcast: the
-        # touched-key set is ∝ the change window, not the corpus.
-        touched = changes.select(*self.group_cols).distinct().localCheckpoint(
-            eager=True
+
+    @staticmethod
+    def _key_semi(
+        frame: DataFrame, kcs: list[str], keys: DataFrame
+    ) -> DataFrame:
+        """Broadcast semi-join of ``frame`` against a changed-key set
+        on the FULL record key (record keys are non-null by the keyed
+        table contract, so plain equality is exact)."""
+        cond = None
+        for j, c in enumerate(kcs):
+            e = frame[c] == keys[f"__ck_{j}"]
+            cond = e if cond is None else cond & e
+        return frame.join(F.broadcast(keys), cond, "left_semi")
+
+    def _affected_facts(
+        self, frames: list[DataFrame], i: int, keys: DataFrame
+    ) -> DataFrame:
+        """Fact rows (frames[0]) whose join path reaches table i's
+        changed keys (:meth:`_changed_keys`) in the given state:
+        propagate the key set down the chain with one semi-join per
+        hop — the LEAF set is broadcast, intermediate neighborhoods
+        stay distributed."""
+        if i == 0:
+            return self._key_semi(
+                frames[0], list(self.tables[0].spec.record_key), keys
+            )
+        # walk the attachment structure toward the fact: the join that
+        # bound table `cur` lives at index cur-1, and its left column's
+        # OWNER is the next table holding referencing rows
+        vals, cur = F.broadcast(keys), i
+        while True:
+            lcol = self.on[cur - 1][0]
+            a = self._owner[cur - 1]
+            x = frames[a].join(vals, frames[a][lcol] == vals["__pv"], "left_semi")
+            if a == 0:
+                return x
+            vals = x.select(F.col(self.on[a - 1][1]).alias("__pv")).distinct()
+            cur = a
+
+    def _pruned_dims(
+        self, affected: DataFrame, frames: list[DataFrame]
+    ) -> list[DataFrame]:
+        """[affected, dims...] with every dimension semi-pruned by the
+        join-key neighborhood propagated from the affected facts —
+        touched-group discovery previously joined affected facts
+        against UNPRUNED dims, scanning every dim in full twice (old ∪
+        new state; r11 VERDICT "What's wrong" #2). Each hop's key set
+        comes from the (already pruned) owner frame, so cost ∝ the
+        affected neighborhoods; inner-join semantics make the pruning
+        lossless."""
+        pruned = [affected]
+        for j, (lcol, rcol) in enumerate(self.on):
+            a = self._owner[j]
+            ks = pruned[a].select(F.col(lcol).alias("__pk")).distinct()
+            d = frames[j + 1]
+            pruned.append(d.join(ks, d[rcol] == ks["__pk"], "left_semi"))
+        return pruned
+
+    def _touched_groups(
+        self, frames: list[DataFrame], changed: list[DataFrame | None]
+    ) -> DataFrame | None:
+        affected = None
+        for i, keys in enumerate(changed):
+            if keys is None:
+                continue
+            s = self._affected_facts(frames, i, keys)
+            affected = s if affected is None else affected.unionByName(s)
+        if affected is None:
+            return None
+        # a fact reached from two changed tables appears twice; the
+        # group projection below is distinct, so no dedup pass is needed
+        return (
+            self._joined(self._pruned_dims(affected, frames))
+            .select(*self.group_cols)
+            .distinct()
         )
-        n_touched = touched.count()
+
+    def _fk_pruned_fact(
+        self, frames: list[DataFrame], touched: DataFrame, phys: list[str]
+    ) -> DataFrame | None:
+        """Fact frame pruned through its JOIN-KEY zones when the group
+        columns live on dimensions (the star/chain norm — e.g. revenue
+        by region name): restrict each dim by the touched groups it
+        carries columns of, propagate those restrictions toward the
+        fact hop by hop (exact distributed semi-joins), and prune the
+        fact's FILES by the first fact-bound hop's surviving key set.
+        None when no dim carries a group column, the propagation
+        reaches the fact unrestricted, or the fact lacks join-key
+        zones — the caller keeps the full frame (advisory, and the
+        touched-group semi-join downstream keeps the result exact)."""
+        n = len(frames)
+        restr: dict[int, DataFrame] = {}
+        restricted = [False] * n
+        for i in range(1, n):
+            cols = [c for c in phys if c in frames[i].columns]
+            if cols:
+                restr[i] = _semi_on_groups(frames[i], touched, cols)
+                restricted[i] = True
+            else:
+                restr[i] = frames[i]
+        if not any(restricted[1:]):
+            return None
+        # far → near: a restricted table j+1 restricts its owner's rows
+        # to those referencing a surviving key (inner-join semantics)
+        for j in range(len(self.on) - 1, -1, -1):
+            a = self._owner[j]
+            if a == 0 or not restricted[j + 1]:
+                continue
+            lcol, rcol = self.on[j]
+            ks = restr[j + 1].select(F.col(rcol).alias("__nk")).distinct()
+            restr[a] = restr[a].join(
+                ks, restr[a][lcol] == ks["__nk"], "left_semi"
+            )
+            restricted[a] = True
+        for j, (lcol, rcol) in enumerate(self.on):
+            if self._owner[j] != 0 or not restricted[j + 1]:
+                continue
+            keys = restr[j + 1].select(F.col(rcol).alias(lcol))
+            pr = _zone_pruned_rows(self.tables[0], keys, [lcol])
+            if pr is not None:
+                return pr
+        return None
+
+    def _incremental(self, cur, new) -> dict:
+        def _one_changed(i):
+            keys = self._changed_keys(i, cur, new)
+            if keys is None:
+                return None
+            keys = keys.localCheckpoint(eager=False)
+            n = keys.count()
+            if n > self.max_broadcast_keys:
+                return _BULK
+            return (keys, n) if n else None
+
+        # per-table change scans are independent — overlap their jobs
+        changed = _pmap(_one_changed, range(len(self.tables)))
+        if any(k is _BULK for k in changed):
+            return self._full(new)
+        walk = [None if k is None else k[0] for k in changed]
+        touched, n_touched = None, 0
+        if self._fact_local and changed[0] is not None:
+            # the fact's key set already is its touched-group set
+            touched, n_touched = changed[0]
+            walk[0] = None
+        if any(k is not None for k in walk):
+            now = [t.read() for t in self.tables]
+            old = [t.read_as_of(cur[i]) for i, t in enumerate(self.tables)]
+            parts = [
+                self._touched_groups(now, walk),
+                self._touched_groups(old, walk),
+            ]
+            if touched is not None:
+                parts.append(touched)
+            touched = parts[0]
+            for g in parts[1:]:
+                touched = touched.unionByName(g)
+            touched = touched.distinct().localCheckpoint(eager=False)
+            n_touched = touched.count()
         if not n_touched:
-            self._write_marker(latest)
-            return {"mode": "incremental", "base_version": latest, "groups_refreshed": 0}
+            self._write_cursor(new)
+            return {
+                "mode": "incremental",
+                "versions": new,
+                "base_version": sum(new),
+                "groups_refreshed": 0,
+            }
         if n_touched > self.max_broadcast_keys:
-            # A bulk rewrite (change window ≈ corpus) must degrade to a
-            # full recompute, never a corpus-sized driver broadcast —
-            # past this point the incremental path saves nothing anyway.
-            return self._full(latest)
-        # Physical (non-derived) group columns prune the snapshot scan
-        # through the base's zone-map sidecar point-wise; derived
-        # date_trunc keys prune through their source column's bucket
-        # intervals. Advisory — None falls back to the full read, and
-        # the semi-join below stays exact.
-        base_rows = _zone_pruned_rows(
-            self.base,
-            touched,
-            [c for c in self.group_cols if c not in self.group_exprs],
-            bucket_cols=_bucket_prunable(self.group_exprs),
+            return self._full(new)
+        seq = sum(new)
+        # Zone-prune each table's recompute scan by the physical group
+        # columns it owns (advisory; the semi-join after the join keeps
+        # the result exact, LEFT-tainted tables included — class
+        # docstring).
+        phys = [c for c in self.group_cols if c not in self.group_exprs]
+        buckets = _bucket_prunable(self.group_exprs)
+        rec, pruned_direct = [], []
+        for t in self.tables:
+            pr = _zone_pruned_rows(
+                t,
+                touched,
+                [c for c in phys if c in t.read().columns] if self.on else phys,
+                bucket_cols=buckets,
+            )
+            rec.append(pr if pr is not None else t.read())
+            pruned_direct.append(pr is not None)
+        if (
+            self.on
+            and not pruned_direct[0]
+            and not self.group_exprs
+            and "left" not in self.hows
+        ):
+            fact_pr = self._fk_pruned_fact(
+                [t.read() for t in self.tables], touched, phys
+            )
+            if fact_pr is not None:
+                rec[0] = fact_pr
+        affected = _semi_on_groups(
+            self._joined(rec), touched, self.group_cols
         )
-        snap = self._derive(
-            base_rows if base_rows is not None else self.base.read()
-        )
-        affected_rows = _semi_on_groups(snap, touched, self.group_cols)
-        fresh = self._aggregate(affected_rows, latest).localCheckpoint(eager=False)
+        fresh = self._aggregate(affected, seq).localCheckpoint(eager=False)
         _merge_touched(
-            self.store, touched, fresh, self.group_cols, self.aggs, latest
+            self.store, touched, fresh, self.group_cols, self.aggs, seq
         )
-        self._write_marker(latest)
+        self._write_cursor(new)
         return {
             "mode": "incremental",
-            "base_version": latest,
+            "versions": new,
+            "base_version": sum(new),
             "groups_refreshed": n_touched,
         }
 
 
-def attach_matview_maintenance(base: KeyedTable, view: MaterializedView) -> None:
-    """Keep the view fresh after every base commit — same advisory
-    post-commit slot as the zone map / ANN / LSH services (failures
-    are isolated and surfaced by ``describe_history``; the view goes
-    stale, never wrong, and the next refresh catches up)."""
+def attach_chain_matview_maintenance(view: ChainMaterializedView) -> None:
+    """Keep the view fresh after every commit of ANY of its tables —
+    the same advisory post-commit slot as the zone map / ANN / LSH
+    services (failures are isolated and surfaced by
+    ``describe_history``; the view goes stale, never wrong, and the
+    next refresh catches up)."""
 
-    def matview_refresh(_table: KeyedTable) -> None:
+    def chain_refresh(_table: KeyedTable) -> None:
         view.refresh()
 
-    base.add_maintenance_hook(matview_refresh)
+    for t in view.tables:
+        t.add_maintenance_hook(chain_refresh)
+
+
+class MaterializedView(ChainMaterializedView):
+    """``SELECT group_cols, aggs FROM base GROUP BY group_cols``: the
+    n = 1 :class:`ChainMaterializedView` under its single-table
+    signature. With no hop, a refresh reduces the change window's pre-
+    and post-images to the touched groups, recomputes exactly those
+    from the (zone-pruned) current snapshot and merges them into the
+    store — never an as-of read. The cursor (``v token`` in
+    ``.mv/_BASE_VERSION``) is the chain's at n = 1."""
+
+    def __init__(
+        self,
+        base: KeyedTable,
+        path: str,
+        group_cols: list[str],
+        aggs: dict[str, str],
+        name: str = "matview",
+        max_broadcast_keys: int = 1_000_000,
+        group_exprs: dict[str, str] | None = None,
+        store_retain_versions: int = 0,
+        store_hash_buckets: int = 0,
+    ):
+        super().__init__(
+            [base],
+            [],
+            path,
+            group_cols,
+            aggs,
+            name=name,
+            max_broadcast_keys=max_broadcast_keys,
+            group_exprs=group_exprs,
+            store_retain_versions=store_retain_versions,
+            store_hash_buckets=store_hash_buckets,
+        )
+
+
+class JoinMaterializedView(ChainMaterializedView):
+    """``SELECT group_cols, aggs FROM left [LEFT] JOIN right ON
+    left.lk = right.rk GROUP BY group_cols``: the n = 2
+    :class:`ChainMaterializedView` under its 2-table signature.
+
+    A dimension-side update MOVES every joined fact row between
+    groups, and a fact-side delete shrinks a group it never names —
+    the chain's old ∪ new touched-group discovery covers both. Under
+    ``how="left"`` a NEW right row for key k moves k's left rows from
+    the NULL group to a value group; k's facts are affected in both
+    states, so both groups refresh. The cursor (``v0 v1 tok0 tok1`` in
+    ``.mv/_BASE_VERSIONS``) is the chain's, so a store written by
+    either class resumes incrementally under the other."""
+
+    def __init__(
+        self,
+        left: KeyedTable,
+        right: KeyedTable,
+        path: str,
+        on: tuple[str, str],
+        group_cols: list[str],
+        aggs: dict[str, str],
+        name: str = "join_matview",
+        how: str = "inner",
+        max_broadcast_keys: int = 1_000_000,
+        group_exprs: dict[str, str] | None = None,
+        store_retain_versions: int = 0,
+        store_hash_buckets: int = 0,
+    ):
+        super().__init__(
+            [left, right],
+            [on],
+            path,
+            group_cols,
+            aggs,
+            name=name,
+            max_broadcast_keys=max_broadcast_keys,
+            group_exprs=group_exprs,
+            store_retain_versions=store_retain_versions,
+            store_hash_buckets=store_hash_buckets,
+            hows=[how],
+        )
 
 
 # --- delta-merge maintenance (invertible aggregates) --------------------------
@@ -705,17 +1125,131 @@ def _require_disjoint_columns(tables: list[KeyedTable]) -> None:
             seen[c] = i
 
 
-class _SignedDeltaMergeMixin:
-    """Shared machinery of the signed-delta maintainers
-    (:class:`DeltaMaterializedView`, :class:`DeltaChainMaterializedView`):
-    hidden-column naming, the intent-marker crash protocol, the
-    full-recompute aggregate that seeds the hidden columns, the signed
-    change-window aggregate, and the store merge. Hosts expose
-    ``self._parsed`` (from :func:`_parse_invertible_aggs`), plus the
-    usual view attributes (spark/path/store/group_cols/
-    max_broadcast_keys)."""
+class DeltaChainMaterializedView(ChainMaterializedView):
+    """GROUP BY over one table or an N-table equi-join tree, maintained
+    by SIGNED DELTA MERGE: change-window images contribute +1 (insert /
+    update_postimage) or −1 (delete / update_preimage) times each
+    aggregate's inner expression, grouped once, and MERGED into the
+    stored values arithmetically. Joins generalize by inclusion–exclusion
+    over the changed tables:
+
+        Δ(T1 ⋈ … ⋈ Tn) = Σ_{∅≠S⊆changed} (−1)^{|S|+1} ·
+                          ⋈_i (ΔTi if i∈S else Ti_new)
+
+    (expand ⋈(Ti_new − ΔTi) and subtract — every non-delta factor is
+    the CURRENT state, so no as-of reads; each term's per-row sign is
+    (−1)^{|S|+1} times the product of its deltas' image signs). For
+    n = 1 the one term is the signed change window itself; for
+    n = 2 this is Δ(A⋈B) = ΔA⋈B_new + A_new⋈ΔB − ΔA⋈ΔB: the third
+    term subtracts the window×window pairs the first two both count.
+    With k changed tables the window costs 2^k − 1 terms — one per
+    table in the overwhelmingly common single-feed refresh — and every
+    term is a join of change windows against NEIGHBORHOOD-PRUNED
+    current states: restrictions propagate from each delta both toward
+    the fact and away from it (one exact semi-join per hop, broadcast
+    when its key set comes straight from a change window, zone-map
+    file pruning where the reached key set is small enough to
+    enumerate), so refresh I/O ∝ the change set's join neighborhoods —
+    never any corpus and never a touched group's full rows (the
+    recompute class re-joins every row of every touched group; a
+    hot group with a billion rows re-aggregates the billion rows
+    there, and only the net signed contributions here).
+
+    LEFT joins (``hows=["left"]``; exactly 2 tables) are maintained as
+    inner + DANGLING corrections. A left join is the inner join plus
+    every unmatched left row extended with NULLs; the inner part is
+    bilinear as above, and the dangling part
+
+        D(A, B) = Σ_{a ∈ A} [match_B(a.key) = 0] · nullext(a)
+
+    moves only where a key's match COUNT transitions 0 ↔ positive:
+
+        ΔD = [D(A_new,B_new) − D(A_old,B_new)]   (ΔA at B_new)
+           + [D(A_old,B_new) − D(A_old,B_old)]   (flip keys × A_old)
+
+    The first bracket keeps exactly the ΔA rows whose key is matchless
+    at B_NEW (both signs — the bracket holds B fixed at its new
+    state); the second re-states A_old = A_new − ΔA over the keys
+    whose match count flipped. match_new comes from the current right
+    side PRUNED to the window's keys; match_old = match_new − Δmatch
+    is pure window arithmetic — no as-of reads, I/O still ∝ the change
+    neighborhoods. NULL left keys never match, so they ride the first
+    bracket with both indicators true.
+
+    Requirements: invertible aggregates — ``sum(<expr>)``,
+    ``count(*)``, ``count(<expr>)`` and ``avg(<expr>)`` merge purely
+    arithmetically; count/sum/avg(DISTINCT <expr>) ride per-(group,
+    value) auxiliary stores; ``min``/``max`` merge arithmetically for
+    ADDED values and fall back to EXTREMUM REPAIR only for groups where
+    a removed contribution tied-or-beat the stored extremum (the delta
+    cannot name the surviving second-best), which re-aggregate from
+    the current join, zone-pruned and group-restricted; a pair that
+    nets to zero across the inclusion–exclusion terms appears with
+    BOTH signs, so any spurious added-instance that could corrupt a
+    merged extremum is accompanied by a removed-instance that forces
+    the repair instead. Joined tables need pairwise-disjoint column
+    names. ``table_changes``' endpoint-state contract (net change per
+    key, insert+delete cancel) makes the signed merge exact across
+    multi-commit windows.
+
+    SQL NULL semantics are preserved: each sum carries a hidden
+    non-null contribution count and renders NULL when it reaches zero
+    (SUM over an empty/all-NULL group is NULL, not 0); a hidden live
+    row count tombstones vanished groups; min/max skip NULLs natively.
+    Integer and DECIMAL sums are associative, so delta-merged values
+    are bit-identical to recomputation; FLOAT/DOUBLE sums can differ in
+    the last ulps — aggregate decimals, cast on read. A bulk rewrite
+    (> ``max_broadcast_keys`` touched groups, or change rows of a
+    window broadcast into a hop) degrades to full recompute. Negative
+    live counts (a malformed feed) raise rather than publish a corrupt
+    view. :class:`DeltaMaterializedView` is the n = 1 form and
+    :class:`DeltaJoinMaterializedView` the n = 2 form, each under its
+    own signature.
+    """
 
     _LIVE = "__live_n"
+
+    def __init__(
+        self,
+        tables: list[KeyedTable],
+        on: list[tuple[str, str]],
+        path: str,
+        group_cols: list[str],
+        aggs: dict[str, str],
+        name: str = "delta_chain_matview",
+        max_broadcast_keys: int = 1_000_000,
+        group_exprs: dict[str, str] | None = None,
+        store_retain_versions: int = 0,
+        store_hash_buckets: int = 0,
+        hows: list[str] | None = None,
+    ):
+        self._parsed = _parse_invertible_aggs(
+            aggs, allow_extrema=True, allow_distinct=True
+        )
+        super().__init__(
+            tables,
+            on,
+            path,
+            group_cols,
+            aggs,
+            name=name,
+            max_broadcast_keys=max_broadcast_keys,
+            group_exprs=group_exprs,
+            store_retain_versions=store_retain_versions,
+            store_hash_buckets=store_hash_buckets,
+            hows=hows,
+        )
+        if "left" in self.hows and len(self.tables) != 2:
+            # the dangling corrections are derived for one hop; an
+            # N-table inclusion–exclusion term has no NULL extension
+            raise ValueError(
+                "LEFT joins are not supported with delta maintenance in "
+                "N-table chains — a LEFT hop needs exactly 2 tables (use "
+                "the recompute chain, or a single LEFT JOIN)"
+            )
+        if self.on:  # one table has nothing to clash with
+            _require_disjoint_columns(tables)
+        self._init_aux_stores(path, name, group_cols, store_hash_buckets)
 
     def _nn(self, c: str) -> str:
         return f"__nn_{c}"
@@ -856,8 +1390,8 @@ class _SignedDeltaMergeMixin:
     # count(DISTINCT <expr>) rides one AUXILIARY store per column:
     # (group, value) -> live contributor count, itself maintained by
     # signed-delta merge over the SAME signed rows the main delta
-    # aggregates (a table's change window for the single-table class;
-    # the inclusion–exclusion contribution union for join/chain). The
+    # aggregates (the change window itself at n = 1, the
+    # inclusion–exclusion contribution union beyond). The
     # view's ndv then moves by the SUM of per-value 0↔positive
     # transitions — pure arithmetic, no recompute ever, I/O ∝ the
     # change set plus the touched (group, value) pairs' aux rows. The
@@ -922,7 +1456,7 @@ class _SignedDeltaMergeMixin:
         Callers run this BEFORE the main store load so a crash between
         the two leaves the cursor behind and the next refresh redoes
         both (initial_load overwrites — idempotent replay)."""
-        if not getattr(self, "_aux", None):
+        if not self._aux:
             return
         done: set[int] = set()
         for c, aux in self._aux.items():
@@ -1040,7 +1574,7 @@ class _SignedDeltaMergeMixin:
         upsert and the main cursor write routes the next refresh to
         _full, which rebuilds aux and view together). Returns the
         extended delta, or None when a bulk window degrades to full."""
-        if not getattr(self, "_aux", None):
+        if not self._aux:
             return delta
         batches, transitions = self._distinct_transitions(ch, sign, seq)
         if batches is None:
@@ -1233,774 +1767,6 @@ class _SignedDeltaMergeMixin:
             "groups_refreshed": n_touched,
             "groups_repaired": n_repaired,
         }
-
-
-class DeltaMaterializedView(_SignedDeltaMergeMixin, MaterializedView):
-    """Materialized view maintained by SIGNED DELTA MERGE: the change
-    window's split images contribute +1 (insert / update_postimage) or
-    −1 (delete / update_preimage) times each aggregate's inner
-    expression, grouped once, and MERGED into the stored values
-    arithmetically — the refresh never reads the base snapshot (the
-    one exception is extremum repair, below).
-
-    Scale contrast with affected-group recompute
-    (:class:`MaterializedView`): recompute costs ∝ the touched
-    groups' BASE ROWS (a hot group with a billion rows re-aggregates
-    a billion rows for a one-row change); delta merge costs ∝ the
-    CHANGE WINDOW alone — one groupBy over the changes plus a
-    broadcast-sized merge into the view store. The price is algebraic
-    invertibility: ``sum(<expr>)``, ``count(*)``, ``count(<expr>)``
-    and ``avg(<expr>)`` merge purely arithmetically; ``min(<expr>)``
-    / ``max(<expr>)`` merge arithmetically for ADDED values
-    (least/greatest) and fall back to SNAPSHOT REPAIR only for groups
-    where a removed value tied-or-beat the stored extremum — the
-    delta cannot name the surviving second-best, so exactly those
-    groups re-aggregate from the base (zone-pruned like the parent
-    class; removals strictly inside the range stay pure delta).
-    DISTINCT still needs the parent class. ``table_changes``'
-    endpoint-state contract (net change per key, insert+delete cancel)
-    makes the signed merge exact across multi-commit windows.
-
-    SQL NULL semantics are preserved: each sum carries a hidden
-    non-null contribution count and renders NULL when it reaches zero
-    (SUM over an empty/all-NULL group is NULL, not 0); a hidden live
-    row count tombstones vanished groups; min/max skip NULLs natively.
-    Exactness note: integer and DECIMAL sums are associative, so
-    delta-merged values are bit-identical to recomputation;
-    FLOAT/DOUBLE sums can differ in the last ulps (order-dependence)
-    — aggregate decimals, cast on read. A bulk rewrite (>
-    ``max_broadcast_keys`` touched groups) degrades to full recompute
-    like the parent. Negative live counts (a malformed feed) raise
-    rather than publish a corrupt view.
-    """
-
-    def __init__(
-        self,
-        base: KeyedTable,
-        path: str,
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "delta_matview",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-    ):
-        self._parsed = _parse_invertible_aggs(
-            aggs, allow_extrema=True, allow_distinct=True
-        )
-        super().__init__(
-            base,
-            path,
-            group_cols,
-            aggs,
-            name=name,
-            max_broadcast_keys=max_broadcast_keys,
-            group_exprs=group_exprs,
-            store_retain_versions=store_retain_versions,
-            store_hash_buckets=store_hash_buckets,
-        )
-        self._init_aux_stores(path, name, group_cols, store_hash_buckets)
-
-    def _full(self, latest: int) -> dict:
-        # aux stores rebuild FIRST: the cursor marker is written by the
-        # parent after the main load, so a crash between the two leaves
-        # the marker behind and the next refresh redoes both —
-        # initial_load overwrites, so the replay is idempotent.
-        self._rebuild_aux(self._derive(self.base.read()), latest)
-        out = super()._full(latest)
-        self._clear_pending()
-        return out
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        """Full-recompute form WITH the hidden invertibility columns —
-        used by the initial load, the bulk-rewrite fallback, and
-        extremum repair. ``rows`` arrive pre-derived (same
-        single-derive discipline as the parent)."""
-        out = rows.groupBy(*self.group_cols).agg(*self._delta_full_agg_cols())
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(*self._hidden_store_cols())
-
-    def _incremental(self, since: int, latest: int) -> dict:
-        if self._pending():
-            # a prior delta apply crashed between the store upsert and
-            # the cursor write — state unknown, rebuild from snapshot
-            return self._full(latest)
-        ch = self._derive(
-            self.base.table_changes(since, latest, include_preimage=True)
-        )
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit(1),
-        ).otherwise(F.lit(-1))
-        delta = (
-            ch.groupBy(*self.group_cols)
-            .agg(*self._delta_window_agg_cols(sign))
-            .localCheckpoint(eager=False)
-        )
-        n_touched = delta.count()
-        if not n_touched:
-            self._write_marker(latest)
-            return {"mode": "delta", "base_version": latest, "groups_refreshed": 0}
-        if n_touched > self.max_broadcast_keys:
-            return self._full(latest)
-        delta = self._apply_distinct_deltas(delta, ch, sign, latest)
-        if delta is None:
-            return self._full(latest)
-
-        # stored value types are pinned by the full-aggregate plan —
-        # delta arithmetic can widen DECIMAL precision, so cast back
-        ref = self._aggregate(self._derive(self.base.read()).limit(0), 0).schema
-
-        def _recompute(groups: DataFrame, seq: int) -> DataFrame:
-            # extremum repair: re-aggregate exactly these groups from
-            # the snapshot, zone-pruned like the parent class's
-            # affected-group recompute (files opened ∝ repair set)
-            rows = _zone_pruned_rows(
-                self.base,
-                groups,
-                [c for c in self.group_cols if c not in self.group_exprs],
-                bucket_cols=_bucket_prunable(self.group_exprs),
-            )
-            snap = self._derive(rows if rows is not None else self.base.read())
-            return self._aggregate(
-                _semi_on_groups(snap, groups, self.group_cols), seq
-            )
-
-        out = self._merge_and_publish(
-            delta,
-            n_touched,
-            latest,
-            ref,
-            lambda: self._write_marker(latest),
-            recompute=_recompute,
-        )
-        if out is None:
-            return self._full(latest)
-        out.update({"mode": "delta", "base_version": latest})
-        return out
-
-
-# --- N-table chain/star join views --------------------------------------------
-
-
-class ChainMaterializedView:
-    """GROUP BY over an N-table equi-join TREE — chain
-    (``T0 JOIN T1 ON T0.fk0 = T1.k1 JOIN T2 ON T1.fk1 = T2.k2``),
-    star (every fk on the fact), or snowflake (each join's left column
-    may belong to ANY earlier table) — incrementally maintained from
-    EVERY table's change feed. :class:`JoinMaterializedView` is its
-    n = 2 form under the 2-table signature.
-
-    Maintenance is affected-group recompute lifted to the chain:
-
-    1. Each changed table reduces its window to a DISTINCT key set
-       (∝ its change set): the fact to its record keys, a dimension
-       Ti to the values its join column carried in either image.
-    2. Those keys propagate DOWN the chain to the fact: changed T2
-       join values select the T1 rows that reference them
-       (semi-join), whose join values select the referencing fact
-       rows — each hop is one semi-join whose leaf key set is
-       broadcast and whose intermediate results stay distributed (AQE
-       picks the strategy; an intermediate neighborhood is NOT
-       driver-bounded).
-    3. Touched groups = group values of the joined AFFECTED fact rows
-       in the NEW state ∪ the OLD state (as-of snapshots at the
-       previous cursor — catches groups that only lost rows, e.g. a
-       dim delete dropping its fact rows from the inner join).
-    4. Exactly those groups recompute from the current full join and
-       merge into the view store (vanished groups tombstone) — the
-       same null-safe `_merge_touched` as every other view class.
-
-    Cost ∝ the changed keys' join neighborhoods, never any corpus.
-    Recompute (not retraction) keeps arbitrary SQL aggregates correct.
-    Idempotent replay: the cursor marker is written after the merge.
-    Every table must be versioned.
-
-    ``hows`` (one per hop, default all ``"inner"``) admits ``"left"``
-    hops: unmatched owner rows survive with the hop's table NULLed —
-    dim-side group columns then carry a real NULL group, and a dim
-    appearing/vanishing moves facts between that group and its own.
-    Affected-fact discovery is unchanged (a dim change affects exactly
-    the facts whose join key equals the changed keys, matched or not),
-    and the LEFT ``_joined`` makes old∪new touched-group discovery see
-    NULL-group transitions. The one semantics-sensitive piece is SCAN
-    PRUNING: dropping a row from any table on a LEFT-reachable path
-    flips downstream rows into the NULL extension instead of removing
-    them. Zone pruning a table by its OWN group
-    columns stays exact: a flipped row carries NULL in every one of
-    them, and a NULL touched value disables that column's pruning, so
-    a flipped row can never land in a refreshed group. FK-propagated
-    fact pruning has no such argument (it would drop dangling facts
-    from a touched NULL group) and is off whenever any hop is LEFT.
-    NOTE: a LEFT hop followed
-    by an INNER hop THROUGH the nullable side re-drops the dangling
-    rows (SQL semantics — spell both hops LEFT for a nullable chain).
-
-    ``tables``: [fact, dim1, dim2, ...] (KeyedTables, retain_versions
-    > 0). ``on``: [(fk_of_T0, key_of_T1), (fk_of_T1, key_of_T2), ...]
-    — column names must be unambiguous across the joined frame
-    (TPC-H-style prefixed schemas satisfy this).
-    """
-
-    def __init__(
-        self,
-        tables: list[KeyedTable],
-        on: list[tuple[str, str]],
-        path: str,
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "chain_matview",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-        hows: list[str] | None = None,
-    ):
-        if len(tables) < 2 or len(on) != len(tables) - 1:
-            raise ValueError(
-                "need >= 2 tables and exactly len(tables)-1 ON pairs"
-            )
-        self.hows = list(hows) if hows is not None else ["inner"] * len(on)
-        if len(self.hows) != len(on) or any(
-            h not in ("inner", "left") for h in self.hows
-        ):
-            raise ValueError(
-                "hows must give 'inner' or 'left' per ON pair, got "
-                f"{self.hows!r}"
-            )
-        for t in tables:
-            if not t.retain_versions:
-                raise ValueError(
-                    "ChainMaterializedView requires every table versioned "
-                    "(retain_versions > 0) — the cursor is a version tuple"
-                )
-        if not group_cols or not aggs:
-            raise ValueError("group_cols and aggs must be non-empty")
-        bad = set(group_cols) & set(aggs)
-        if bad:
-            raise ValueError(f"column(s) both grouped and aggregated: {sorted(bad)}")
-        self.group_exprs = dict(group_exprs or {})
-        stray = set(self.group_exprs) - set(group_cols)
-        if stray:
-            raise ValueError(
-                f"group_exprs name(s) not in group_cols: {sorted(stray)}"
-            )
-        self.tables = list(tables)
-        self.on = list(on)
-        # Attachment structure: join j binds tables[j+1] via
-        # on[j] = (left_col, right_col) where right_col belongs to
-        # tables[j+1] and left_col to exactly ONE earlier table — a
-        # linear chain owns it at j, a star at 0, a snowflake anywhere
-        # between. The owner indices drive key propagation toward the
-        # fact in _affected_facts.
-        cols_of = [set(t.read().columns) for t in tables]
-        self._owner: list[int] = []
-        for j, (lcol, rcol) in enumerate(self.on):
-            if rcol not in cols_of[j + 1]:
-                raise ValueError(
-                    f"ON right column {rcol!r} is not in table {j + 1}"
-                )
-            owners = [i for i in range(j + 1) if lcol in cols_of[i]]
-            if len(owners) != 1:
-                raise ValueError(
-                    f"ON left column {lcol!r} must belong to exactly one "
-                    f"earlier table (found in {owners})"
-                )
-            self._owner.append(owners[0])
-        self.spark: SparkSession = tables[0].spark
-        self.path = path
-        self.group_cols = list(group_cols)
-        self.aggs = dict(aggs)
-        self.max_broadcast_keys = max_broadcast_keys
-        self.store = KeyedTable(
-            self.spark,
-            path,
-            TableSpec(
-                name,
-                record_key=tuple(group_cols),
-                precombine_key=_SEQ_COL,
-                partition_granularity="",
-                hash_buckets=store_hash_buckets,
-            ),
-            retain_versions=store_retain_versions,
-        )
-
-    # -- cursor ----------------------------------------------------------------
-
-    def _marker_path(self) -> str:
-        return f"{self.path}/.mv/_BASE_VERSIONS"
-
-    def refreshed_versions(self) -> tuple[int, ...] | None:
-        parts = (_read_small(self.spark, self._marker_path()) or "").split()
-        n = len(self.tables)
-        if len(parts) != 2 * n:
-            return None
-        try:
-            versions = tuple(int(p) for p in parts[:n])
-        except ValueError:
-            return None
-        if any(
-            parts[n + i] != _inc_token(t) for i, t in enumerate(self.tables)
-        ):
-            return None  # some table was RESET since the cursor
-        return versions
-
-    def _write_cursor(self, versions: tuple[int, ...]) -> None:
-        _write_small(
-            self.spark,
-            self._marker_path(),
-            " ".join(str(v) for v in versions)
-            + " "
-            + " ".join(_inc_token(t) for t in self.tables),
-        )
-
-    # -- plans -----------------------------------------------------------------
-
-    def _joined(self, frames: list[DataFrame]) -> DataFrame:
-        out = frames[0]
-        for (fk, k), d, how in zip(self.on, frames[1:], self.hows):
-            out = out.join(d, out[fk] == d[k], how)
-        for c, e in self.group_exprs.items():
-            out = out.withColumn(c, F.expr(e))
-        return out
-
-    def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
-        out = rows.groupBy(*self.group_cols).agg(
-            *[F.expr(e).alias(c) for c, e in self.aggs.items()]
-        )
-        return out.withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-
-    def read(self) -> DataFrame:
-        return _read_store(self.store).drop(_SEQ_COL)
-
-    def refresh(self) -> dict:
-        return _record_refresh(self, self._refresh())
-
-    def _refresh(self) -> dict:
-        heads = tuple((t.versions() or [0])[-1] for t in self.tables)
-        cur = self.refreshed_versions()
-        if cur == heads:
-            return {
-                "mode": "noop",
-                "versions": cur,
-                "base_version": sum(cur),
-                "groups_refreshed": 0,
-            }
-        if cur is None or any(
-            cur[i] not in t.readable_versions()
-            for i, t in enumerate(self.tables)
-        ):
-            return self._full(heads)
-        return self._incremental(cur, heads)
-
-    def _full(self, heads: tuple[int, ...]) -> dict:
-        rows = self._joined([t.read() for t in self.tables])
-        self.store.initial_load(self._aggregate(rows, sum(heads)))
-        n = self.store.read().count()
-        self._write_cursor(heads)
-        return {
-            "mode": "full",
-            "versions": heads,
-            "base_version": sum(heads),
-            "groups_refreshed": n,
-        }
-
-    def _changed_keys(self, i: int, cur, new) -> DataFrame | None:
-        """Distinct key set of table i's change window, or None when
-        that table did not move.
-
-        The fact (i = 0) yields its FULL record-key tuples (aliased
-        ``__ck_<j>``): keying on the leading component alone would
-        collapse distinct composite-key rows sharing it, silently
-        omitting their groups from the touched set (r11 ADVICE,
-        medium). A dimension yields the non-NULL values of the column
-        its hop joins on, over pre AND post images (aliased ``__pv``):
-        exactly the values the changed rows carried in the old or the
-        new state, so the walk toward the fact needs no scan of the
-        dimension itself. A row absent from one state (an insert
-        walked in the old state, a delete in the new) still names the
-        facts whose NULL-group membership flipped under a LEFT hop;
-        NULL join values match nothing."""
-        if new[i] <= cur[i]:
-            return None
-        t = self.tables[i]
-        if i == 0:
-            kcs = list(t.spec.record_key)
-            return (
-                t.table_changes(cur[i], new[i])
-                .select(*[F.col(c).alias(f"__ck_{j}") for j, c in enumerate(kcs)])
-                .distinct()
-            )
-        return (
-            t.table_changes(cur[i], new[i], include_preimage=True)
-            .select(F.col(self.on[i - 1][1]).alias("__pv"))
-            .filter(F.col("__pv").isNotNull())
-            .distinct()
-        )
-
-    @staticmethod
-    def _key_semi(
-        frame: DataFrame, kcs: list[str], keys: DataFrame
-    ) -> DataFrame:
-        """Broadcast semi-join of ``frame`` against a changed-key set
-        on the FULL record key (record keys are non-null by the keyed
-        table contract, so plain equality is exact)."""
-        cond = None
-        for j, c in enumerate(kcs):
-            e = frame[c] == keys[f"__ck_{j}"]
-            cond = e if cond is None else cond & e
-        return frame.join(F.broadcast(keys), cond, "left_semi")
-
-    def _affected_facts(
-        self, frames: list[DataFrame], i: int, keys: DataFrame
-    ) -> DataFrame:
-        """Fact rows (frames[0]) whose join path reaches table i's
-        changed keys (:meth:`_changed_keys`) in the given state:
-        propagate the key set down the chain with one semi-join per
-        hop — the LEAF set is broadcast, intermediate neighborhoods
-        stay distributed."""
-        if i == 0:
-            return self._key_semi(
-                frames[0], list(self.tables[0].spec.record_key), keys
-            )
-        # walk the attachment structure toward the fact: the join that
-        # bound table `cur` lives at index cur-1, and its left column's
-        # OWNER is the next table holding referencing rows
-        vals, cur = F.broadcast(keys), i
-        while True:
-            lcol = self.on[cur - 1][0]
-            a = self._owner[cur - 1]
-            x = frames[a].join(vals, frames[a][lcol] == vals["__pv"], "left_semi")
-            if a == 0:
-                return x
-            vals = x.select(F.col(self.on[a - 1][1]).alias("__pv")).distinct()
-            cur = a
-
-    def _pruned_dims(
-        self, affected: DataFrame, frames: list[DataFrame]
-    ) -> list[DataFrame]:
-        """[affected, dims...] with every dimension semi-pruned by the
-        join-key neighborhood propagated from the affected facts —
-        touched-group discovery previously joined affected facts
-        against UNPRUNED dims, scanning every dim in full twice (old ∪
-        new state; r11 VERDICT "What's wrong" #2). Each hop's key set
-        comes from the (already pruned) owner frame, so cost ∝ the
-        affected neighborhoods; inner-join semantics make the pruning
-        lossless."""
-        pruned = [affected]
-        for j, (lcol, rcol) in enumerate(self.on):
-            a = self._owner[j]
-            ks = pruned[a].select(F.col(lcol).alias("__pk")).distinct()
-            d = frames[j + 1]
-            pruned.append(d.join(ks, d[rcol] == ks["__pk"], "left_semi"))
-        return pruned
-
-    def _touched_groups(
-        self, frames: list[DataFrame], changed: list[DataFrame | None]
-    ) -> DataFrame | None:
-        affected = None
-        for i, keys in enumerate(changed):
-            if keys is None:
-                continue
-            s = self._affected_facts(frames, i, keys)
-            affected = s if affected is None else affected.unionByName(s)
-        if affected is None:
-            return None
-        # a fact reached from two changed tables appears twice; the
-        # group projection below is distinct, so no dedup pass is needed
-        return (
-            self._joined(self._pruned_dims(affected, frames))
-            .select(*self.group_cols)
-            .distinct()
-        )
-
-    def _fk_pruned_fact(
-        self, frames: list[DataFrame], touched: DataFrame, phys: list[str]
-    ) -> DataFrame | None:
-        """Fact frame pruned through its JOIN-KEY zones when the group
-        columns live on dimensions (the star/chain norm — e.g. revenue
-        by region name): restrict each dim by the touched groups it
-        carries columns of, propagate those restrictions toward the
-        fact hop by hop (exact distributed semi-joins), and prune the
-        fact's FILES by the first fact-bound hop's surviving key set.
-        None when no dim carries a group column, the propagation
-        reaches the fact unrestricted, or the fact lacks join-key
-        zones — the caller keeps the full frame (advisory, and the
-        touched-group semi-join downstream keeps the result exact)."""
-        n = len(frames)
-        restr: dict[int, DataFrame] = {}
-        restricted = [False] * n
-        for i in range(1, n):
-            cols = [c for c in phys if c in frames[i].columns]
-            if cols:
-                restr[i] = _semi_on_groups(frames[i], touched, cols)
-                restricted[i] = True
-            else:
-                restr[i] = frames[i]
-        if not any(restricted[1:]):
-            return None
-        # far → near: a restricted table j+1 restricts its owner's rows
-        # to those referencing a surviving key (inner-join semantics)
-        for j in range(len(self.on) - 1, -1, -1):
-            a = self._owner[j]
-            if a == 0 or not restricted[j + 1]:
-                continue
-            lcol, rcol = self.on[j]
-            ks = restr[j + 1].select(F.col(rcol).alias("__nk")).distinct()
-            restr[a] = restr[a].join(
-                ks, restr[a][lcol] == ks["__nk"], "left_semi"
-            )
-            restricted[a] = True
-        for j, (lcol, rcol) in enumerate(self.on):
-            if self._owner[j] != 0 or not restricted[j + 1]:
-                continue
-            keys = restr[j + 1].select(F.col(rcol).alias(lcol))
-            pr = _zone_pruned_rows(self.tables[0], keys, [lcol])
-            if pr is not None:
-                return pr
-        return None
-
-    def _incremental(self, cur, new) -> dict:
-        def _one_changed(i):
-            keys = self._changed_keys(i, cur, new)
-            if keys is None:
-                return None
-            keys = keys.localCheckpoint(eager=False)
-            n = keys.count()
-            if n > self.max_broadcast_keys:
-                return _BULK
-            return keys if n else None
-
-        # per-table change scans are independent — overlap their jobs
-        changed = _pmap(_one_changed, range(len(self.tables)))
-        if any(k is _BULK for k in changed):
-            return self._full(new)
-        if all(k is None for k in changed):
-            self._write_cursor(new)
-            return {
-                "mode": "incremental",
-                "versions": new,
-                "base_version": sum(new),
-                "groups_refreshed": 0,
-            }
-        now = [t.read() for t in self.tables]
-        old = [
-            t.read_as_of(cur[i]) for i, t in enumerate(self.tables)
-        ]
-        tg_new = self._touched_groups(now, changed)
-        tg_old = self._touched_groups(old, changed)
-        touched = tg_new if tg_old is None else tg_new.unionByName(tg_old)
-        touched = touched.distinct().localCheckpoint(eager=False)
-        n_touched = touched.count()
-        if not n_touched:
-            self._write_cursor(new)
-            return {
-                "mode": "incremental",
-                "versions": new,
-                "base_version": sum(new),
-                "groups_refreshed": 0,
-            }
-        if n_touched > self.max_broadcast_keys:
-            return self._full(new)
-        seq = sum(new)
-        # Zone-prune each table's recompute scan by the physical group
-        # columns it owns (advisory; the semi-join after the join keeps
-        # the result exact, LEFT-tainted tables included — class
-        # docstring).
-        phys = [c for c in self.group_cols if c not in self.group_exprs]
-        buckets = _bucket_prunable(self.group_exprs)
-        rec, pruned_direct = [], []
-        for i, t in enumerate(self.tables):
-            pr = _zone_pruned_rows(
-                t,
-                touched,
-                [c for c in phys if c in now[i].columns],
-                bucket_cols=buckets,
-            )
-            rec.append(pr if pr is not None else now[i])
-            pruned_direct.append(pr is not None)
-        if (
-            not pruned_direct[0]
-            and not self.group_exprs
-            and "left" not in self.hows
-        ):
-            fact_pr = self._fk_pruned_fact(now, touched, phys)
-            if fact_pr is not None:
-                rec[0] = fact_pr
-        affected = _semi_on_groups(
-            self._joined(rec), touched, self.group_cols
-        )
-        fresh = self._aggregate(affected, seq).localCheckpoint(eager=False)
-        _merge_touched(
-            self.store, touched, fresh, self.group_cols, self.aggs, seq
-        )
-        self._write_cursor(new)
-        return {
-            "mode": "incremental",
-            "versions": new,
-            "base_version": sum(new),
-            "groups_refreshed": n_touched,
-        }
-
-
-def attach_chain_matview_maintenance(view: ChainMaterializedView) -> None:
-    """Enroll the view in EVERY chained table's post-commit slot."""
-
-    def chain_refresh(_table: KeyedTable) -> None:
-        view.refresh()
-
-    for t in view.tables:
-        t.add_maintenance_hook(chain_refresh)
-
-
-class JoinMaterializedView(ChainMaterializedView):
-    """``SELECT group_cols, aggs FROM left [LEFT] JOIN right ON
-    left.lk = right.rk GROUP BY group_cols``: the n = 2
-    :class:`ChainMaterializedView` under its 2-table signature.
-
-    A dimension-side update MOVES every joined fact row between
-    groups, and a fact-side delete shrinks a group it never names —
-    the chain's old ∪ new touched-group discovery covers both. Under
-    ``how="left"`` a NEW right row for key k moves k's left rows from
-    the NULL group to a value group; k's facts are affected in both
-    states, so both groups refresh. The cursor (``v0 v1 tok0 tok1`` in
-    ``.mv/_BASE_VERSIONS``) is the chain's, so a store written by
-    either class resumes incrementally under the other."""
-
-    def __init__(
-        self,
-        left: KeyedTable,
-        right: KeyedTable,
-        path: str,
-        on: tuple[str, str],
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "join_matview",
-        how: str = "inner",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-    ):
-        super().__init__(
-            [left, right],
-            [on],
-            path,
-            group_cols,
-            aggs,
-            name=name,
-            max_broadcast_keys=max_broadcast_keys,
-            group_exprs=group_exprs,
-            store_retain_versions=store_retain_versions,
-            store_hash_buckets=store_hash_buckets,
-            hows=[how],
-        )
-
-
-class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
-    """GROUP BY over an N-table equi-join tree, maintained by SIGNED
-    DELTA MERGE — join bilinearity generalized by inclusion–exclusion
-    over the changed tables:
-
-        Δ(T1 ⋈ … ⋈ Tn) = Σ_{∅≠S⊆changed} (−1)^{|S|+1} ·
-                          ⋈_i (ΔTi if i∈S else Ti_new)
-
-    (expand ⋈(Ti_new − ΔTi) and subtract — every non-delta factor is
-    the CURRENT state, so no as-of reads; each term's per-row sign is
-    (−1)^{|S|+1} times the product of its deltas' image signs). For
-    n = 2 this is Δ(A⋈B) = ΔA⋈B_new + A_new⋈ΔB − ΔA⋈ΔB: the third
-    term subtracts the window×window pairs the first two both count.
-    With k changed tables the window costs 2^k − 1 terms — one per
-    table in the overwhelmingly common single-feed refresh — and every
-    term is a join of change windows against NEIGHBORHOOD-PRUNED
-    current states: restrictions propagate from each delta both toward
-    the fact and away from it (one exact semi-join per hop, broadcast
-    when its key set comes straight from a change window, zone-map
-    file pruning where the reached key set is small enough to
-    enumerate), so refresh I/O ∝ the change set's join neighborhoods —
-    never any corpus and never a touched group's full rows (the
-    recompute class re-joins every row of every touched group; a
-    far-dim rename over a billion-row group re-aggregates the billion
-    rows there, and only the net signed contributions here).
-
-    LEFT joins (``hows=["left"]``; exactly 2 tables) are maintained as
-    inner + DANGLING corrections. A left join is the inner join plus
-    every unmatched left row extended with NULLs; the inner part is
-    bilinear as above, and the dangling part
-
-        D(A, B) = Σ_{a ∈ A} [match_B(a.key) = 0] · nullext(a)
-
-    moves only where a key's match COUNT transitions 0 ↔ positive:
-
-        ΔD = [D(A_new,B_new) − D(A_old,B_new)]   (ΔA at B_new)
-           + [D(A_old,B_new) − D(A_old,B_old)]   (flip keys × A_old)
-
-    The first bracket keeps exactly the ΔA rows whose key is matchless
-    at B_NEW (both signs — the bracket holds B fixed at its new
-    state); the second re-states A_old = A_new − ΔA over the keys
-    whose match count flipped. match_new comes from the current right
-    side PRUNED to the window's keys; match_old = match_new − Δmatch
-    is pure window arithmetic — no as-of reads, I/O still ∝ the change
-    neighborhoods. NULL left keys never match, so they ride the first
-    bracket with both indicators true.
-
-    Requirements: invertible aggregates (sum/count/avg, plus min/max
-    with JOIN-SIDE extremum repair — groups where a removed
-    contribution tied-or-beat the stored extremum re-aggregate from
-    the current join, zone-pruned and group-restricted; a pair that
-    nets to zero across the inclusion–exclusion terms appears with
-    BOTH signs, so any spurious added-instance that could corrupt a
-    merged extremum is accompanied by a removed-instance that forces
-    the repair instead); pairwise-disjoint column names; same
-    intent-marker crash protocol, bulk-rewrite degradation, NULL-sum
-    semantics, and hash-bucketed store pruning as the single-table
-    delta class. :class:`DeltaJoinMaterializedView` is the n = 2 form
-    under the 2-table signature.
-    """
-
-    def __init__(
-        self,
-        tables: list[KeyedTable],
-        on: list[tuple[str, str]],
-        path: str,
-        group_cols: list[str],
-        aggs: dict[str, str],
-        name: str = "delta_chain_matview",
-        max_broadcast_keys: int = 1_000_000,
-        group_exprs: dict[str, str] | None = None,
-        store_retain_versions: int = 0,
-        store_hash_buckets: int = 0,
-        hows: list[str] | None = None,
-    ):
-        self._parsed = _parse_invertible_aggs(
-            aggs, allow_extrema=True, allow_distinct=True
-        )
-        super().__init__(
-            tables,
-            on,
-            path,
-            group_cols,
-            aggs,
-            name=name,
-            max_broadcast_keys=max_broadcast_keys,
-            group_exprs=group_exprs,
-            store_retain_versions=store_retain_versions,
-            store_hash_buckets=store_hash_buckets,
-            hows=hows,
-        )
-        if "left" in self.hows and len(self.tables) != 2:
-            # the dangling corrections are derived for one hop; an
-            # N-table inclusion–exclusion term has no NULL extension
-            raise ValueError(
-                "LEFT joins are not supported with delta maintenance in "
-                "N-table chains — a LEFT hop needs exactly 2 tables (use "
-                "the recompute chain, or a single LEFT JOIN)"
-            )
-        _require_disjoint_columns(tables)
-        self._init_aux_stores(path, name, group_cols, store_hash_buckets)
 
     def _aggregate(self, rows: DataFrame, seq: int) -> DataFrame:
         out = rows.groupBy(*self.group_cols).agg(*self._delta_full_agg_cols())
@@ -2216,7 +1982,12 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         def _one_delta(i):
             if new[i] <= cur[i]:
                 return None
-            d = self._signed_changes(i, cur, new).localCheckpoint(eager=False)
+            d = self._signed_changes(i, cur, new)
+            if not self.on:
+                # no hop broadcasts this window: the grouped delta's
+                # own bulk guard below bounds the refresh
+                return d
+            d = d.localCheckpoint(eager=False)
             cnt = d.count()
             if cnt > self.max_broadcast_keys:
                 return _BULK
@@ -2227,38 +1998,31 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
         if any(d is _BULK for d in deltas):
             return self._full(new)
         changed = [i for i in range(n) if deltas[i] is not None]
-        if not changed:
-            self._write_cursor(new)
-            return {
-                "mode": "delta",
-                "versions": new,
-                "base_version": seq,
-                "groups_refreshed": 0,
-            }
-        from itertools import combinations
+        n_touched = 0
+        if changed:
+            from itertools import combinations
 
-        now = [t.read() for t in self.tables]
-        terms = []
-        for k in range(1, len(changed) + 1):
-            for S in combinations(changed, k):
-                terms.append(self._term(frozenset(S), deltas, now))
-        if "left" in self.hows:  # 2 tables (constructor)
-            terms.extend(self._dangling_terms(deltas, now))
-        contrib = terms[0]
-        for t in terms[1:]:
-            contrib = contrib.unionByName(t)
-        for c, e in self.group_exprs.items():
-            contrib = contrib.withColumn(c, F.expr(e))
-        if self._aux:
-            # the aux transitions re-read the contribution union once
-            # per distinct column — materialize the term joins once
-            contrib = contrib.localCheckpoint(eager=False)
-        delta = (
-            contrib.groupBy(*self.group_cols)
-            .agg(*self._delta_window_agg_cols(F.col("__sg")))
-            .localCheckpoint(eager=False)
-        )
-        n_touched = delta.count()
+            now = [t.read() for t in self.tables]
+            terms = []
+            for k in range(1, len(changed) + 1):
+                for S in combinations(changed, k):
+                    terms.append(self._term(frozenset(S), deltas, now))
+            if "left" in self.hows:  # 2 tables (constructor)
+                terms.extend(self._dangling_terms(deltas, now))
+            contrib = terms[0]
+            for t in terms[1:]:
+                contrib = contrib.unionByName(t)
+            contrib = self._derive(contrib)
+            if self._aux:
+                # the aux transitions re-read the contribution union
+                # once per distinct column — materialize the joins once
+                contrib = contrib.localCheckpoint(eager=False)
+            delta = (
+                contrib.groupBy(*self.group_cols)
+                .agg(*self._delta_window_agg_cols(F.col("__sg")))
+                .localCheckpoint(eager=False)
+            )
+            n_touched = delta.count()
         if not n_touched:
             self._write_cursor(new)
             return {
@@ -2286,7 +2050,10 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
             rec = []
             for i, t in enumerate(self.tables):
                 pr = _zone_pruned_rows(
-                    t, groups, [c for c in phys if c in now[i].columns]
+                    t,
+                    groups,
+                    [c for c in phys if c in now[i].columns],
+                    bucket_cols=_bucket_prunable(self.group_exprs),
                 )
                 rec.append(pr if pr is not None else now[i])
             return self._aggregate(
@@ -2306,6 +2073,41 @@ class DeltaChainMaterializedView(_SignedDeltaMergeMixin, ChainMaterializedView):
             return self._full(new)
         out.update({"mode": "delta", "versions": new, "base_version": seq})
         return out
+
+
+class DeltaMaterializedView(DeltaChainMaterializedView):
+    """``SELECT group_cols, aggs FROM base GROUP BY group_cols``
+    maintained by signed delta merge: the n = 1
+    :class:`DeltaChainMaterializedView` under the single-table
+    signature. The refresh groups the signed change window once and
+    merges it into the store — it never reads the base snapshot except
+    for extremum repair (zone-pruned, repair set only). The cursor
+    (``v token`` in ``.mv/_BASE_VERSION``) is the chain's at n = 1."""
+
+    def __init__(
+        self,
+        base: KeyedTable,
+        path: str,
+        group_cols: list[str],
+        aggs: dict[str, str],
+        name: str = "delta_matview",
+        max_broadcast_keys: int = 1_000_000,
+        group_exprs: dict[str, str] | None = None,
+        store_retain_versions: int = 0,
+        store_hash_buckets: int = 0,
+    ):
+        super().__init__(
+            [base],
+            [],
+            path,
+            group_cols,
+            aggs,
+            name=name,
+            max_broadcast_keys=max_broadcast_keys,
+            group_exprs=group_exprs,
+            store_retain_versions=store_retain_versions,
+            store_hash_buckets=store_hash_buckets,
+        )
 
 
 class DeltaJoinMaterializedView(DeltaChainMaterializedView):

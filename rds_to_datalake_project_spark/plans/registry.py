@@ -64,6 +64,18 @@ _PRIORITY = (
     "delta_join_matview_nation_revenue",
     "join_matview_nation_revenue",
     "left_join_matview_revenue",
+    # --- tier A'': the single-table view rows whose maintainer was
+    # folded into the chain classes (single-table views are now n = 1
+    # chains) and that sat outside the window — they overlap the r13
+    # VERDICT #2 carry list. They displace gapfill_hourly_events,
+    # order_priority_stats, orders_except_filtered, pagerank_trade_graph
+    # and table_diff_report, the tier-C rows with the longest green
+    # histories (3-7 checked rounds, every one green).
+    "delta_matview_priority_revenue",
+    "matview_rewrite_rollup",
+    "minmax_delta_matview_prices",
+    "pruned_matview_refresh",
+    "sql_matview_time_bucket",
     # --- tier B (r13): the r8 stale tier (5) — the queries that yielded
     # their r12 slots to the new services, owed per the r12 registry
     # comment and r12 VERDICT "Next round" #9.
@@ -72,7 +84,8 @@ _PRIORITY = (
     "mixture_sample_counts",
     "sketch_cms_after_cdc_md5",
     "weighted_sample_docs",
-    # --- tier C (r13): the r9 stale tier (31 in r13, 27 after tier A') —
+    # --- tier C (r13): the r9 stale tier (31 in r13, 27 after tier A',
+    # 22 after tier A'') —
     # with tiers A+B this retired ALL pre-r10 rotation debt in one
     # window (r12 VERDICT "Next round" #9's done-criterion).
     "above_brand_average_parts",
@@ -84,22 +97,17 @@ _PRIORITY = (
     "equidepth_price_histogram",
     "event_transition_matrix",
     "fk_violation_counts",
-    "gapfill_hourly_events",
     "grouped_quantiles_by_priority",
     "histogram_quantiles_price",
     "image_ahash_neardups",
     "m4_downsample_events",
     "neardup_keep_best_md5",
-    "order_priority_stats",
-    "orders_except_filtered",
     "orders_partition_checksums",
     "overlap_user_promo_spans",
-    "pagerank_trade_graph",
     "pivot_nation_priority_revenue",
     "revenue_cube",
     "rolling_anomaly_hours",
     "scd2_store_incremental",
-    "table_diff_report",
     "time_weighted_value",
     "unpivot_roundtrip",
     # --- tier D: core CDC/SQL round-trips — kept in-window every round

@@ -264,16 +264,11 @@ def attach_meta(mv, m: re.Match) -> None:
     the view object (CREATE MATERIALIZED VIEW calls this). Views built
     programmatically carry no meta and are never rewrite candidates.
     """
-    base = _unq(m.group("base"))
-    if m.group("joins"):
-        hops = _canon_hops(m.group("joins"))
-        if hops is None:  # never expected — the CREATE regex vetted it
-            return
-        frm = base + hops[0]
-    else:
-        frm = base
+    hops = _canon_hops(m.group("joins") or "")
+    if hops is None:  # never expected — the CREATE regex vetted it
+        return
     mv.rewrite_meta = {
-        "from": frm,
+        "from": _unq(m.group("base")) + hops[0],
         "group_cols": list(mv.group_cols),
         "group_exprs": {c: _norm(e) for c, e in mv.group_exprs.items()},
         # normalized agg expression -> store column name
@@ -287,19 +282,13 @@ def _lag(mv) -> int | None:
     a base was reset, a delta intent is pending, or the cursor is
     somehow AHEAD of a head). Metadata reads only."""
     from rds_to_datalake_project_spark.operators.matview import (
-        _SignedDeltaMergeMixin,
+        DeltaChainMaterializedView,
     )
 
-    if isinstance(mv, _SignedDeltaMergeMixin) and mv._pending():
+    if isinstance(mv, DeltaChainMaterializedView) and mv._pending():
         return None
-    tables = getattr(mv, "tables", None)
-    if tables is not None:  # join views: one cursor entry per table
-        cur = mv.refreshed_versions()
-    else:
-        tables = [mv.base]
-        v = mv.refreshed_version()
-        cur = None if v is None else (v,)
-    heads = tuple((t.versions() or [0])[-1] for t in tables)
+    cur = mv.refreshed_versions()
+    heads = tuple((t.versions() or [0])[-1] for t in mv.tables)
     if cur is None or any(h < c for h, c in zip(heads, cur)):
         return None
     return sum(h - c for h, c in zip(heads, cur))

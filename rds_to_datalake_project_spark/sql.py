@@ -98,7 +98,9 @@ TIME_TRAVEL_TABLES: dict[str, object] = {}
 
 # Session-level registry of facade-created materialized views
 # (CREATE MATERIALIZED VIEW ... populates it; REFRESH/DROP resolve
-# against it). Values are operators.matview.MaterializedView.
+# against it). Values are operators.matview view instances — every
+# class there is a ChainMaterializedView (recompute) or a
+# DeltaChainMaterializedView (signed delta) form.
 MATVIEWS: dict[str, object] = {}
 
 
@@ -302,11 +304,9 @@ _PURGE_RE = re.compile(
 # KeyedTables (operators/matview.py) through the SQL layer. The AS
 # body is the maintainable shape — SELECT <group cols + aliased
 # aggregates> FROM <registered table> [[INNER | LEFT [OUTER]] JOIN
-# <registered table> ON <l> = <r>]... GROUP BY <group cols>. Without
-# a JOIN the view is a single-table MaterializedView; with k JOINs it
-# is the (k+1)-table join view (JoinMaterializedView for one JOIN,
-# ChainMaterializedView beyond), maintained from every joined table's
-# change feed.
+# <registered table> ON <l> = <r>]... GROUP BY <group cols>. With k
+# JOINs (k >= 0) the view is a (k+1)-table chain view, maintained from
+# every joined table's change feed.
 _CREATE_MV_RE = re.compile(
     rf"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+({_QNAME})"
     r"(?:\s+WITH\s+(?P<auto>AUTO\s+)?(?P<delta>DELTA\s+)?REFRESH"
@@ -602,12 +602,6 @@ def _split_top_level(text: str) -> list[str]:
     return [p.strip() for p in parts if p.strip()]
 
 
-def _mv_tables(mv) -> list:
-    """Base tables of a view: every joined table of a join view, the
-    one base of a single-table view."""
-    return mv.tables if hasattr(mv, "tables") else [mv.base]
-
-
 def _publish_matview(spark: SparkSession, name: str, mv) -> None:
     """Expose the view's current contents to plain SELECTs. Re-run
     after every refresh: the temp view pins the snapshot plan that
@@ -692,7 +686,7 @@ def _validate_mv_name(name: str) -> None:
         )
 
 
-def _finish_matview_create(spark, m: re.Match, name: str, mv, hooked_tables):
+def _finish_matview_create(spark, m: re.Match, name: str, mv):
     """Shared CREATE tail: initial refresh BEFORE wiring auto-refresh
     hooks (a broken AS body must fail the CREATE cleanly — hooks
     attached first would outlive the failed statement), then hook
@@ -707,7 +701,7 @@ def _finish_matview_create(spark, m: re.Match, name: str, mv, hooked_tables):
             _mv.refresh()
             _publish_matview(spark, _name, _mv)
 
-        for t in hooked_tables:
+        for t in mv.tables:
             t.add_maintenance_hook(_auto_hook)
     MATVIEWS[name] = mv
     _publish_matview(spark, name, mv)
@@ -805,10 +799,11 @@ def _create_matview_statement(spark: SparkSession, m: re.Match, known: dict):
     [BUCKETS n]] AS SELECT <group cols + aliased aggregates> FROM
     <registered table> [[INNER | LEFT [OUTER]] JOIN <registered table>
     ON <l> = <r>]... GROUP BY <group cols>`` → an incrementally
-    maintained view from operators/matview.py: MaterializedView
-    without a JOIN, JoinMaterializedView for one JOIN and
-    ChainMaterializedView for more (the DELTA classes under WITH DELTA
-    REFRESH), maintained from every joined table's change feed. The
+    maintained (k+1)-table chain view from operators/matview.py for k
+    JOINs — built under its named form (MaterializedView,
+    JoinMaterializedView, ChainMaterializedView, or the Delta class of
+    each under WITH DELTA REFRESH), maintained from every joined
+    table's change feed. The
     store lives under the base table's ``.matviews/`` directory; the
     view is initially refreshed, registered for REFRESH/DROP and (for
     simple names) published as a temp view for SELECTs.
@@ -837,6 +832,9 @@ def _create_matview_statement(spark: SparkSession, m: re.Match, known: dict):
         "store_hash_buckets": int(m.group("buckets") or 0),
     }
     delta = bool(m.group("delta"))
+    # every form runs the same chain maintainer; this only maps the
+    # arguments onto the named form's signature, so SHOW/DESCRIBE keep
+    # reporting MaterializedView / JoinMaterializedView for 1 / 2 tables
     if len(tables) == 1:
         cls = mvs.DeltaMaterializedView if delta else mvs.MaterializedView
         mv = cls(tables[0], path, group_cols, aggs, **kw)
@@ -846,7 +844,7 @@ def _create_matview_statement(spark: SparkSession, m: re.Match, known: dict):
     else:
         cls = mvs.DeltaChainMaterializedView if delta else mvs.ChainMaterializedView
         mv = cls(tables, on, path, group_cols, aggs, hows=hows, **kw)
-    return _finish_matview_create(spark, m, name, mv, tables)
+    return _finish_matview_create(spark, m, name, mv)
 
 
 def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
@@ -904,8 +902,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
       KEEP HISTORY rewrites retained snapshots minus the purged keys)
     - ``CREATE MATERIALIZED VIEW <v> [WITH [AUTO] [DELTA] REFRESH]
       AS SELECT ... FROM <t> GROUP BY ...`` → incrementally-maintained
-      view (operators/matview.MaterializedView; AUTO attaches a
-      post-commit hook on the base; DELTA selects signed-delta
+      view (operators/matview chain views; AUTO attaches a
+      post-commit hook on every base; DELTA selects signed-delta
       maintenance — sum/count/avg/min/max/count(DISTINCT), refresh
       I/O ∝ the change set; works on single tables, 2-table joins,
       and N-table chains)
@@ -1185,13 +1183,13 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         # also refuses to serve). Metadata reads only.
         from rds_to_datalake_project_spark import rewrite as _rw
         from rds_to_datalake_project_spark.operators.matview import (
-            _SignedDeltaMergeMixin,
+            DeltaChainMaterializedView,
         )
 
         rows = []
         for name, mv in MATVIEWS.items():
-            tables = ",".join(t.spec.name for t in _mv_tables(mv))
-            is_delta = isinstance(mv, _SignedDeltaMergeMixin)
+            tables = ",".join(t.spec.name for t in mv.tables)
+            is_delta = isinstance(mv, DeltaChainMaterializedView)
             try:
                 lag = _rw._lag(mv)
             except Exception:
@@ -1218,7 +1216,7 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
         # crashed delta apply left a pending intent (the next refresh
         # will full-rebuild) — the matview twin of DESCRIBE HISTORY.
         from rds_to_datalake_project_spark.operators.matview import (
-            _SignedDeltaMergeMixin,
+            DeltaChainMaterializedView,
         )
 
         name = _unquote_ident(m.group(1))
@@ -1228,13 +1226,12 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
                 f"DESCRIBE MATERIALIZED VIEW on unknown view {name!r}; "
                 f"known: {sorted(MATVIEWS)}"
             )
-        tables = ",".join(t.spec.name for t in _mv_tables(mv))
-        cursor = (
-            mv.refreshed_versions()
-            if hasattr(mv, "tables")
-            else mv.refreshed_version()
-        )
-        is_delta = isinstance(mv, _SignedDeltaMergeMixin)
+        tables = ",".join(t.spec.name for t in mv.tables)
+        # one version per base table, comma-joined like base_tables
+        # (a single-table view prints its one version)
+        cur = mv.refreshed_versions()
+        cursor = None if cur is None else ",".join(str(v) for v in cur)
+        is_delta = isinstance(mv, DeltaChainMaterializedView)
         aux = ",".join(sorted(getattr(mv, "_aux", {}) or {})) or None
         return _literal_frame(spark, 
             [
@@ -1243,7 +1240,7 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
                     type(mv).__name__,
                     "delta" if is_delta else "recompute",
                     tables,
-                    str(cursor),
+                    cursor,
                     ",".join(mv.group_cols),
                     aux,
                     bool(mv._pending()) if is_delta else False,
@@ -1266,10 +1263,8 @@ def _maintenance_statement(spark: SparkSession, sql: str, known: dict):
             # REFRESH ... FULL: operator-forced rebuild from the
             # current snapshot(s) — the ops verb for "I don't trust
             # the view" (e.g. after an out-of-band store repair).
-            heads = tuple((t.versions() or [0])[-1] for t in _mv_tables(mv))
-            # join views take the tuple of heads, single-table views
-            # the one head
-            info = mv._full(heads if hasattr(mv, "tables") else heads[0])
+            heads = tuple((t.versions() or [0])[-1] for t in mv.tables)
+            info = mv._full(heads)
         else:
             info = mv.refresh()
         _publish_matview(spark, name, mv)

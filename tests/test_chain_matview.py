@@ -305,7 +305,7 @@ def test_streaming_replica_keeps_attached_matview_fresh(spark, tmp_path):
     topology (RDS → lake → Athena rollup) as one live pipeline."""
     from rds_to_datalake_project_spark.operators.matview import (
         MaterializedView,
-        attach_matview_maintenance,
+        attach_chain_matview_maintenance,
     )
     from rds_to_datalake_project_spark.operators.replicate import (
         bootstrap_replica,
@@ -331,7 +331,7 @@ def test_streaming_replica_keeps_attached_matview_fresh(spark, tmp_path):
          "total": "CAST(sum(amount) AS BIGINT)"},
     )
     view.refresh()  # bootstrap happened before the hook existed
-    attach_matview_maintenance(replica, view)
+    attach_chain_matview_maintenance(view)
     ckpt = str(tmp_path / "ckpt")
     stream_replicate(replica, feed, ckpt)
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from rds_to_datalake_project_spark.operators.matview import (
     DeltaMaterializedView,
+    MaterializedView,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 from rds_to_datalake_project_spark.schema import TableSpec
@@ -25,7 +26,7 @@ AGGS = {
 }
 
 
-def _mk(spark, tmp_path):
+def _mk(spark, tmp_path, cls=DeltaMaterializedView):
     spec = TableSpec(
         "facts", record_key=("f_id",), precombine_key="seq",
         partition_granularity=None,
@@ -41,7 +42,7 @@ def _mk(spark, tmp_path):
             rows, "f_id long, grp string, amount long, opt long, seq long"
         )
     )
-    view = DeltaMaterializedView(t, str(tmp_path / "v"), ["grp"], AGGS)
+    view = cls(t, str(tmp_path / "v"), ["grp"], AGGS)
     return t, view
 
 
@@ -205,6 +206,13 @@ def test_sql_facade_delta_refresh_spelling(spark, tmp_path):
             spark, "REFRESH MATERIALIZED VIEW dv", tables=reg
         ).collect()[0]
         assert info["mode"] == "noop"
+        # the cursor renders one version per base table: one here
+        d = run_query(
+            spark, "DESCRIBE MATERIALIZED VIEW dv", tables=reg
+        ).collect()[0]
+        assert d["view_class"] == "DeltaMaterializedView"
+        assert d["strategy"] == "delta" and d["base_tables"] == "facts"
+        assert d["cursor"] == "1" == str(t.versions()[-1])
         run_query(spark, "DROP MATERIALIZED VIEW dv", tables=reg)
     finally:
         MATVIEWS.pop("dv", None)
@@ -241,6 +249,100 @@ def test_sql_refresh_full_forces_rebuild(spark, tmp_path):
         assert info["mode"] == "noop"
     finally:
         MATVIEWS.pop("dv2", None)
+
+
+def _parent_layout_store(spark, t, path, delta):
+    """The store and cursor a single-table view wrote before it became
+    the n = 1 chain form, spelled out column by column: a group-keyed,
+    unpartitioned KeyedTable (delta views add the hidden non-null and
+    live counts) plus ``.mv/_BASE_VERSION`` holding "<v> <token>"."""
+    import os
+
+    v = (t.versions() or [0])[-1]  # initial load: no commit yet
+    aggs = [
+        F.count("*").cast("long").alias("n"),
+        F.sum(F.col("amount").cast("decimal(20,2)")).alias("total"),
+        F.count("opt").cast("long").alias("n_vals"),
+        F.sum("opt").alias("opt_sum"),
+    ]
+    if delta:
+        aggs += [
+            F.count("amount").cast("long").alias("__nn_total"),
+            F.count("opt").cast("long").alias("__nn_opt_sum"),
+            F.count("*").cast("long").alias("__live_n"),
+        ]
+    store = KeyedTable(
+        spark,
+        path,
+        TableSpec(
+            "delta_matview" if delta else "matview",
+            record_key=("grp",),
+            precombine_key="_refresh_seq",
+            partition_granularity="",
+        ),
+    )
+    store.initial_load(
+        t.read()
+        .groupBy("grp")
+        .agg(*aggs)
+        .withColumn("_refresh_seq", F.lit(v).cast("long"))
+    )
+    os.makedirs(f"{path}/.mv", exist_ok=True)
+    with open(f"{path}/.mv/_BASE_VERSION", "w") as fh:
+        fh.write(f"{v} {t.incarnation() or '-'}")
+
+
+@pytest.mark.parametrize("delta", [False, True], ids=["recompute", "delta"])
+def test_single_table_store_reopens_as_chain(spark, tmp_path, delta):
+    """A store and cursor written in the single-table layout reopen
+    under the n = 1 chain form and refresh INCREMENTALLY — the cursor
+    file name and its "<v> <token>" content are the chain's at n = 1."""
+    t, _ = _mk(spark, tmp_path)
+    path = str(tmp_path / "old_store")
+    _parent_layout_store(spark, t, path, delta)
+    cls = DeltaMaterializedView if delta else MaterializedView
+    view = cls(t, path, ["grp"], AGGS)
+    assert view.refreshed_versions() == (0,)
+    t.upsert(
+        _batch(spark, [(900, "g0", 5, 1, 1), (5, "g3", 50, None, 1)]).unionByName(
+            _batch(spark, [(6, "g2", 60, None, 1)], op="D")
+        ),
+        delete_mode="apply",
+    )
+    out = view.refresh()
+    assert out["mode"] == ("delta" if delta else "incremental"), out
+    assert out["groups_refreshed"] == 4  # g0, g1 (5 left it), g2, g3
+    assert _got(view) == _direct(t)
+
+
+@pytest.mark.parametrize("delta", [False, True], ids=["recompute", "delta"])
+def test_single_table_refresh_reads_no_as_of_snapshot(
+    spark, tmp_path, monkeypatch, delta
+):
+    """An n = 1 incremental refresh takes its touched groups straight
+    off the change window: the only as-of reads are the change feed's
+    own endpoint diff, never a snapshot walk by the view."""
+    import sys
+
+    t, view = _mk(
+        spark, tmp_path, DeltaMaterializedView if delta else MaterializedView
+    )
+    view.refresh()
+    t.upsert(
+        _batch(spark, [(7, "g0", 1, 2, 1), (901, None, 3, None, 1)]),
+        delete_mode="apply",
+    )
+    real = KeyedTable.read_as_of
+
+    def guarded(self, *a, **kw):
+        if sys._getframe(1).f_code.co_name != "table_changes":
+            raise AssertionError("the view read an as-of snapshot")
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(KeyedTable, "read_as_of", guarded)
+    out = view.refresh()
+    assert out["mode"] == ("delta" if delta else "incremental"), out
+    assert _got(view) == _direct(t)
 
 
 def test_delta_with_derived_group_keys(spark, tmp_path):

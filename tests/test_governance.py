@@ -13,7 +13,7 @@ from rds_to_datalake_project_spark.operators import expectations as X
 from rds_to_datalake_project_spark.operators import stats as ST
 from rds_to_datalake_project_spark.operators.matview import (
     MaterializedView,
-    attach_matview_maintenance,
+    attach_chain_matview_maintenance,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 from rds_to_datalake_project_spark.schema import TableSpec
@@ -213,10 +213,10 @@ def test_matview_marker_loss_forces_full_rebuild(spark, tmp_path):
 def test_matview_maintenance_hook(spark, tmp_path):
     t = _mk(spark, tmp_path)
     mv = MaterializedView(t, str(tmp_path / "mv"), ["grp"], AGGS)
-    attach_matview_maintenance(t, mv)
+    attach_chain_matview_maintenance(mv)
     t.upsert(spark.createDataFrame(B1, BCOLS), delete_mode="apply")
     # hook refreshed the view as part of the commit's advisory slot
-    assert mv.refreshed_version() == 1
+    assert mv.refreshed_versions() == (1,)
     assert _mv_state(mv) == _direct(t)
 
 

@@ -783,7 +783,7 @@ def test_stacked_views_cascade_through_versioned_store(spark, tmp_path):
     reset as incremental progress."""
     from rds_to_datalake_project_spark.operators.matview import (
         MaterializedView,
-        attach_matview_maintenance,
+        attach_chain_matview_maintenance,
     )
 
     facts, _, _ = _mk(spark, tmp_path)
@@ -803,8 +803,8 @@ def test_stacked_views_cascade_through_versioned_store(spark, tmp_path):
         group_exprs={"parity": "CAST(f_dim % 2 AS BIGINT)"},
     )
     lvl2.refresh()
-    attach_matview_maintenance(facts, lvl1)
-    attach_matview_maintenance(lvl1.store, lvl2)
+    attach_chain_matview_maintenance(lvl1)
+    attach_chain_matview_maintenance(lvl2)
 
     def want():
         return {
@@ -836,7 +836,7 @@ def test_stacked_views_cascade_through_versioned_store(spark, tmp_path):
     # fires the maintenance hook, whose refresh sees the re-minted
     # incarnation and full-rebuilds level 2 immediately — an explicit
     # refresh afterwards is a clean noop, never a stale read
-    lvl1._full((facts.versions() or [0])[-1])
+    lvl1._full(((facts.versions() or [0])[-1],))
     assert got() == want()
     out = lvl2.refresh()
     assert out["mode"] in ("noop", "full")

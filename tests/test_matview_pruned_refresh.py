@@ -27,7 +27,7 @@ from rds_to_datalake_project_spark.operators.matview import (
     DeltaMaterializedView,
     JoinMaterializedView,
     MaterializedView,
-    attach_matview_maintenance,
+    attach_chain_matview_maintenance,
 )
 from rds_to_datalake_project_spark.operators.upsert import KeyedTable
 from rds_to_datalake_project_spark.schema import TableSpec
@@ -453,7 +453,7 @@ def test_delta_view_stacks_into_downstream_view(spark, tmp_path):
         {"total": "sum(s)"},
         group_exprs={"g2": "g % 2"},
     )
-    attach_matview_maintenance(hourly.store, daily)
+    attach_chain_matview_maintenance(daily)
     daily.refresh()
 
     batch = spark.createDataFrame(
